@@ -108,9 +108,9 @@ def train_codebooks(
     UNTRUNCATED canonicalized plan) — so a FILTERED input never hits
     another input's entry and two wide plans that truncate to the same
     rendered string stay distinct; entries of other applicationIds are
-    evicted on lookup (the _session_memo rule). Cached arrays are frozen
-    read-only before caching, so a consumer mutating its result raises
-    instead of poisoning every later hit."""
+    evicted on lookup (as in queries._session_kernel). Cached arrays are
+    frozen read-only before caching, so a consumer mutating its result
+    raises instead of poisoning every later hit."""
     spark = emb.sparkSession
     app_id = spark.sparkContext.applicationId
     plan_key = _plan_digest(emb)

@@ -30,36 +30,21 @@ from strava_vector_search_spark.operators import search as S
 # helpers
 
 
-_QUERY_VEC_CACHE: dict[tuple[str, int], list[float]] = {}
-
-
-def _query_vec(spark: SparkSession, sf_dir: str, vec_id: int = 0) -> list[float]:
-    """Fetch one stored embedding to serve as the query vector (the testdata
-    analogue of embedding the query text driver-side, reference 02:206-208).
-    Memoized per (sf_dir, vec_id): the value is a pure function of the
-    parquet file, so repeated queries skip the lookup job entirely."""
-    key = (sf_dir.rstrip("/"), vec_id)
-    if key not in _QUERY_VEC_CACHE:
-        emb = load_table(spark, sf_dir, "embeddings")
-        row = emb.filter(F.col("vec_id") == vec_id).select("embedding").head()
-        _QUERY_VEC_CACHE[key] = [float(x) for x in row["embedding"]]
-    return _QUERY_VEC_CACHE[key]
-
-
 def _dsum(col, scale: int = 2):
     """Order-insensitive float sum: exact decimal accumulation, then double."""
     return F.round(F.sum(F.col(col).cast("decimal(18,6)")).cast("double"), scale)
 
 
-def _src_fingerprint(sf_dir: str, table: str) -> str:
-    """Cheap fingerprint of a source parquet (mtime+size of every file):
-    derived-layout caches under /tmp embed it in their done-marker so a
-    REGENERATED testdata directory (same path, new contents) invalidates
-    the cache instead of silently serving a stale layout."""
+def _src_fingerprint(sf_dir: str, table: str | None = None) -> str:
+    """Cheap fingerprint of a source parquet (mtime+size of every file), or
+    of every parquet file under ``sf_dir`` when ``table`` is None: derived
+    layouts under /tmp and the session kernels embed it, so a REGENERATED
+    testdata directory (same path, new contents) invalidates them instead
+    of silently serving stale data."""
     import hashlib
     import os
 
-    root = os.path.join(sf_dir, f"{table}.parquet")
+    root = sf_dir if table is None else os.path.join(sf_dir, f"{table}.parquet")
     parts = []
     if os.path.isfile(root):
         st = os.stat(root)
@@ -71,6 +56,78 @@ def _src_fingerprint(sf_dir: str, table: str) -> str:
                     st = os.stat(os.path.join(dirp, n))
                     parts.append(f"{n}:{st.st_mtime_ns}:{st.st_size}")
     return hashlib.md5("|".join(parts).encode()).hexdigest()[:16]
+
+
+# (kernel, applicationId, sf_dir, *args) -> (sf_dir fingerprint, value)
+_SESSION_KERNELS: dict[tuple, tuple[str, object]] = {}
+
+
+def _session_kernel(build=None, *, widen: bool = False):
+    """Decorator: build a shared kernel once per (SparkSession, sf_dir,
+    remaining args) and hand every later caller the IDENTICAL object —
+    consumers that memoize on plan identity (PQ codebook training) depend
+    on that. The one validity rule: an entry serves only its own
+    applicationId, and only while :func:`_src_fingerprint` of the sf_dir
+    is unchanged. Entries of other applicationIds are evicted on every
+    call (a checkpointed DataFrame is only valid inside its session, and
+    stale entries would pin dead lineage for the process lifetime); a
+    regenerated sf_dir rebuilds.
+
+    A DataFrame result is stored as ``localCheckpoint(eager=False)``;
+    tuple, list and dict results are stored as returned (their bodies
+    checkpoint their own DataFrames). ``widen=True`` repartitions a
+    DataFrame to cluster width before checkpointing: a single-file
+    parquet scan arrives as ONE partition and a checkpoint FREEZES that
+    width, so every consumer's first map stage would run on one core —
+    the md5_embedding_table densification lesson. On a real multi-file
+    scan the source already arrives at cluster width and the repartition
+    is a near-no-op."""
+    import functools
+    import inspect
+
+    def decorate(fn):
+        sig = inspect.signature(fn)
+
+        @functools.wraps(fn)
+        def kernel(spark: SparkSession, sf_dir: str, *args, **kwargs):
+            bound = sig.bind(spark, sf_dir, *args, **kwargs)
+            bound.apply_defaults()
+            app_id = spark.sparkContext.applicationId
+            for old in [k for k in _SESSION_KERNELS if k[1] != app_id]:
+                del _SESSION_KERNELS[old]
+            key = (
+                fn.__name__,
+                app_id,
+                sf_dir.rstrip("/"),
+                *list(bound.arguments.values())[2:],
+            )
+            fingerprint = _src_fingerprint(sf_dir)
+            hit = _SESSION_KERNELS.get(key)
+            if hit is not None and hit[0] == fingerprint:
+                return hit[1]
+            value = fn(*bound.args, **bound.kwargs)
+            if isinstance(value, DataFrame):
+                if widen:
+                    value = value.repartition(
+                        spark.sparkContext.defaultParallelism
+                    )
+                value = value.localCheckpoint(eager=False)
+            _SESSION_KERNELS[key] = (fingerprint, value)
+            return value
+
+        return kernel
+
+    return decorate if build is None else decorate(build)
+
+
+@_session_kernel
+def _query_vec(spark: SparkSession, sf_dir: str, vec_id: int = 0) -> list[float]:
+    """Fetch one stored embedding to serve as the query vector (the testdata
+    analogue of embedding the query text driver-side, reference 02:206-208).
+    A session kernel per vec_id, so repeated queries skip the lookup job."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    row = emb.filter(F.col("vec_id") == vec_id).select("embedding").head()
+    return [float(x) for x in row["embedding"]]
 
 
 def _cached_layout(sf_dir: str, table: str, kind: str, build_fn) -> str:
@@ -2919,27 +2976,22 @@ QUERIES.update({"a12_approx_quantiles": a12_approx_quantiles})
 # BM25 full-text retrieval (operators/fulltext.py)
 
 
-_BM25_STATS_CACHE: dict[tuple[str, str], dict] = {}
-
-
+@_session_kernel
 def _bm25_stats(spark: SparkSession, sf_dir: str, table: str) -> dict:
-    """Memoized BM25 corpus stats per (sf_dir, source): a pure function of
-    the parquet file, so repeated queries skip the stats pass — the same
-    batch-retrieval amortization ``bm25_topk(stats=...)`` gives users."""
+    """BM25 corpus stats per source table, a session kernel so repeated
+    queries skip the stats pass — the same batch-retrieval amortization
+    ``bm25_topk(stats=...)`` gives users."""
     from strava_vector_search_spark.operators.fulltext import (
         BM25_TERMS,
         bm25_corpus_stats,
     )
 
-    key = (sf_dir.rstrip("/"), table)
-    if key not in _BM25_STATS_CACHE:
-        src = (
-            load_table(spark, sf_dir, "documents")
-            if table == "documents"
-            else corpus_with_vectors(spark, sf_dir)
-        )
-        _BM25_STATS_CACHE[key] = bm25_corpus_stats(src, "text", BM25_TERMS)
-    return _BM25_STATS_CACHE[key]
+    src = (
+        load_table(spark, sf_dir, "documents")
+        if table == "documents"
+        else corpus_with_vectors(spark, sf_dir)
+    )
+    return bm25_corpus_stats(src, "text", BM25_TERMS)
 
 
 def tx_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5970,50 +6022,40 @@ def vs_maxsim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 QUERIES.update({"vs_maxsim_topk": vs_maxsim_topk})
 
 
-_MARKOV_COUNTS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@_session_kernel
 def _markov_transition_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(from_type, to_type, n) in-session transition counts — the shared
     corpus kernel of ev_markov_transition_matrix (row-normalized matrix)
     and ev_markov_stationary (power iteration): both gates fold the
     events table through the IDENTICAL sessionize + lag + count pipeline
     (two user-keyed window shuffles + one aggregate) before their own
-    tiny-kernel math. Memoized per (session, sf) — the r12
+    tiny-kernel math. A session kernel — the r12
     prepare_pagerank_graph precedent (share the seed-independent prep,
     keep each gate's own computation); ev_session_paths keeps computing
     the sessionize pipeline raw, so the corpus pipeline's cost stays an
     honestly benched number there."""
-
-    def _build() -> DataFrame:
-        ev = load_events(spark, sf_dir)
-        us = F.unix_micros(F.col("ts"))
-        w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-        gap_us = 30 * 60 * 1_000_000
-        with_id = ev.withColumn(
-            "new_sess",
-            F.when(
-                F.lag(us).over(w).isNull() | ((us - F.lag(us).over(w)) > gap_us),
-                1,
-            ).otherwise(0),
-        ).withColumn(
-            "session_seq",
-            F.sum("new_sess").over(
-                w.rowsBetween(Window.unboundedPreceding, 0)
-            ),
-        )
-        ws = Window.partitionBy("user_id", "session_seq").orderBy(
-            "ts", "event_id"
-        )
-        paths = with_id.withColumn(
-            "prev_type", F.lag("event_type").over(ws)
-        ).filter(F.col("prev_type").isNotNull())
-        return paths.groupBy(
-            F.col("prev_type").alias("from_type"),
-            F.col("event_type").alias("to_type"),
-        ).agg(F.count(F.lit(1)).alias("n"))
-
-    return _session_memo(_MARKOV_COUNTS_CACHE, spark, sf_dir, _build)
+    ev = load_events(spark, sf_dir)
+    us = F.unix_micros(F.col("ts"))
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    gap_us = 30 * 60 * 1_000_000
+    with_id = ev.withColumn(
+        "new_sess",
+        F.when(
+            F.lag(us).over(w).isNull() | ((us - F.lag(us).over(w)) > gap_us),
+            1,
+        ).otherwise(0),
+    ).withColumn(
+        "session_seq",
+        F.sum("new_sess").over(w.rowsBetween(Window.unboundedPreceding, 0)),
+    )
+    ws = Window.partitionBy("user_id", "session_seq").orderBy("ts", "event_id")
+    paths = with_id.withColumn(
+        "prev_type", F.lag("event_type").over(ws)
+    ).filter(F.col("prev_type").isNotNull())
+    return paths.groupBy(
+        F.col("prev_type").alias("from_type"),
+        F.col("event_type").alias("to_type"),
+    ).agg(F.count(F.lit(1)).alias("n"))
 
 
 def ev_markov_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6527,184 +6569,108 @@ def smp_rerank_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
 QUERIES.update({"smp_rerank_triples": smp_rerank_triples})
 
 
-def _session_memo(
-    cache: dict,
-    spark: SparkSession,
-    sf_dir: str,
-    build,
-    widen: bool = False,
-):
-    """Per-(SparkSession, sf) memo of a lazily-checkpointed DataFrame —
-    the shared-kernel amortization used by _trade_pairs / _co_order_edges
-    / _doc_shingles / _token_arrays. Entries keyed by OTHER applicationIds
-    are evicted on lookup: a checkpointed DataFrame is only valid within
-    its own session, and stale entries would pin dead lineage for the
-    process lifetime.
-
-    ``widen=True``: repartition the built table to cluster width before
-    checkpointing. A single-file parquet scan arrives as ONE partition
-    and a checkpoint FREEZES that width, so every consumer's first map
-    stage (window explodes, pair zips) would run on one core while 31
-    idle — the md5_embedding_table densification lesson. The one-off
-    shuffle of the small memo table buys cluster-wide map stages for
-    every consumer; on a real multi-file 100 TB scan the source already
-    arrives at cluster width and the repartition is a near-no-op cost."""
-    app_id = spark.sparkContext.applicationId
-    for stale in [k for k in cache if k[0] != app_id]:
-        del cache[stale]
-    key = (app_id, sf_dir.rstrip("/"))
-    if key not in cache:
-        df = build()
-        if widen:
-            df = df.repartition(spark.sparkContext.defaultParallelism)
-        cache[key] = df.localCheckpoint(eager=False)
-    return cache[key]
-
-
-_TRADE_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@_session_kernel
 def _trade_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct customer<->supplier trade pairs (columns ``c``, ``s``) from
     orders |><| lineitem — the shared edge kernel of g_pagerank / g_ppr /
-    g_hits. Memoized per (session, sf) as a lazily-checkpointed DataFrame
-    (the _bm25_stats amortization pattern): the three fixed-point gates
-    consume the SAME kernel, so one distinct-pairs build serves all of
-    them instead of re-running the o|><|li join + distinct per gate.
-    Keyed by applicationId because a checkpointed DataFrame is only valid
-    within its own SparkSession; entries keyed by OTHER applicationIds are
-    evicted on lookup — they belong to stopped sessions and would otherwise
-    pin dead checkpointed DataFrames for the process lifetime."""
-    def _build() -> DataFrame:
-        o = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_custkey"
+    g_hits: the three fixed-point gates consume the SAME kernel, so one
+    distinct-pairs build serves all of them instead of re-running the
+    o|><|li join + distinct per gate."""
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_suppkey"
+    )
+    return (
+        o.join(li, o["o_orderkey"] == li["l_orderkey"])
+        .select(
+            F.concat(F.lit("c"), F.col("o_custkey")).alias("c"),
+            F.concat(F.lit("s"), F.col("l_suppkey")).alias("s"),
         )
-        li = load_table(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_suppkey"
-        )
-        return (
-            o.join(li, o["o_orderkey"] == li["l_orderkey"])
-            .select(
-                F.concat(F.lit("c"), F.col("o_custkey")).alias("c"),
-                F.concat(F.lit("s"), F.col("l_suppkey")).alias("s"),
-            )
-            .distinct()
-        )
-
-    return _session_memo(_TRADE_PAIRS_CACHE, spark, sf_dir, _build)
+        .distinct()
+    )
 
 
-_CO_ORDER_EDGES_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@_session_kernel
 def _co_order_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sparsified part co-order edge list (columns ``u`` < ``v``): per-order
     part pairs (bounded by lines-per-order, never all-pairs) aggregated to
     co-occurrence weights and kept at w >= 2 — the shared kernel of
-    g_kcore / g_triangle_count / g_label_propagation. Memoized per
-    (session, sf) as a lazily-checkpointed DataFrame with the same
-    eviction rule as :func:`_trade_pairs`: one edge build serves all three
-    graph gates instead of re-running the o|><|o self-join per gate."""
-    def _build() -> DataFrame:
-        li = load_table(spark, sf_dir, "lineitem")
-        op = li.select("l_orderkey", "l_partkey").distinct()
-        a, b = op.alias("a"), op.alias("b")
-        return (
-            a.join(
-                b,
-                (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-                & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-            )
-            .groupBy(
-                F.col("a.l_partkey").alias("u"),
-                F.col("b.l_partkey").alias("v"),
-            )
-            .agg(F.count(F.lit(1)).alias("w"))
-            .filter(F.col("w") >= 2)
-            .select("u", "v")
+    g_kcore / g_triangle_count / g_label_propagation: one edge build
+    serves all three graph gates instead of re-running the o|><|o
+    self-join per gate."""
+    li = load_table(spark, sf_dir, "lineitem")
+    op = li.select("l_orderkey", "l_partkey").distinct()
+    a, b = op.alias("a"), op.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
+            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
         )
-
-    return _session_memo(_CO_ORDER_EDGES_CACHE, spark, sf_dir, _build)
-
-
-_DOC_SHINGLES_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, _sh: distinct 3-gram shingle array) over documents — the
-    shared shingle table of the Bloom decontamination trio and the
-    novelty pair. Memoized per (session, sf) as a lazily-checkpointed
-    DataFrame with the stale-applicationId eviction rule of
-    :func:`_trade_pairs`: the shingling scan (tokenize + 3-gram + distinct
-    over the whole corpus) dominates each consumer's cost, and five gates
-    consume the identical table — one build serves them all."""
-    from strava_vector_search_spark.operators.dedup import shingles
-
-    return _session_memo(
-        _DOC_SHINGLES_CACHE,
-        spark,
-        sf_dir,
-        lambda: load_table(spark, sf_dir, "documents").select(
-            "doc_id", shingles(F.col("text")).alias("_sh")
-        ),
-        widen=True,
+        .groupBy(
+            F.col("a.l_partkey").alias("u"),
+            F.col("b.l_partkey").alias("v"),
+        )
+        .agg(F.count(F.lit(1)).alias("w"))
+        .filter(F.col("w") >= 2)
+        .select("u", "v")
     )
 
 
-_MINHASH_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
+@_session_kernel(widen=True)
+def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, _sh: distinct 3-gram shingle array) over documents — the
+    shared shingle table of the Bloom decontamination trio and the
+    novelty pair: the shingling scan (tokenize + 3-gram + distinct over
+    the whole corpus) dominates each consumer's cost, and five gates
+    consume the identical table — one build serves them all."""
+    from strava_vector_search_spark.operators.dedup import shingles
+
+    return load_table(spark, sf_dir, "documents").select(
+        "doc_id", shingles(F.col("text")).alias("_sh")
+    )
 
 
+@_session_kernel
 def _minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Verified near-dup pairs over documents (MinHash LSH 16 hashes /
     4 bands, exact-Jaccard >= 0.5) — the shared pair kernel of the FIVE
     downstream dedup gates (dd_connected_components, dd_cluster_keep_best,
     dd_component_stats, dd_soft_dedup_weights, smp_leakage_safe_split),
     each of which previously re-ran the whole LSH + verify pipeline per
-    construction per bench rep. Memoized per (session, sf) exactly like
-    _trade_pairs (the r12 prepare_pagerank_graph precedent: share the
-    seed-independent prep, keep each gate's own computation per gate).
-    dd_minhash_lsh_verified — the gate that MEASURES the pair pipeline —
-    deliberately does NOT consume the memo, so the pipeline's own cost
-    stays an honestly benched number."""
+    construction per bench rep (the r12 prepare_pagerank_graph
+    precedent: share the seed-independent prep, keep each gate's own
+    computation per gate). dd_minhash_lsh_verified — the gate that
+    MEASURES the pair pipeline — deliberately does NOT consume the
+    kernel, so the pipeline's own cost stays an honestly benched number."""
     from strava_vector_search_spark.operators.dedup import (
         minhash_dedup_verified,
     )
 
-    return _session_memo(
-        _MINHASH_PAIRS_CACHE,
-        spark,
-        sf_dir,
-        lambda: minhash_dedup_verified(
-            load_table(spark, sf_dir, "documents"),
-            "doc_id",
-            "text",
-            threshold=0.5,
-        ),
+    return minhash_dedup_verified(
+        load_table(spark, sf_dir, "documents"),
+        "doc_id",
+        "text",
+        threshold=0.5,
     )
 
 
-_BLOOM_EVAL_KEYS_CACHE: dict[tuple[str, str], DataFrame] = {}
-_BLOOM_EVAL_FILTER_CACHE: dict[tuple[str, str], DataFrame] = {}
-_BLOOM_EVAL_SHARDED_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@_session_kernel
 def _bloom_eval_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct eval-set (doc_id % 41 == 0) shingles — the reference key
     set every dd_bloom_* gate folds into a filter and
     dd_bloom_prefilter_exact additionally semi-joins for the exact
-    verify. One explode+distinct per (session, sf) instead of one per
-    gate per rep (guide §2.4)."""
-    return _session_memo(
-        _BLOOM_EVAL_KEYS_CACHE,
-        spark,
-        sf_dir,
-        lambda: _doc_shingles(spark, sf_dir)
+    verify. One explode+distinct per session instead of one per gate per
+    rep (guide §2.4)."""
+    return (
+        _doc_shingles(spark, sf_dir)
         .filter(F.col("doc_id") % 41 == 0)
         .select(F.explode("_sh").alias("s"))
-        .distinct(),
+        .distinct()
     )
 
 
+@_session_kernel
 def _bloom_eval_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 16384-bit / k=4 Bloom filter over _bloom_eval_keys — byte-for-
     byte the filter dd_bloom_decontaminate and dd_bloom_prefilter_exact
@@ -6713,14 +6679,10 @@ def _bloom_eval_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows; the probe side of every consumer is untouched."""
     from strava_vector_search_spark.operators.bloom import build_filter
 
-    return _session_memo(
-        _BLOOM_EVAL_FILTER_CACHE,
-        spark,
-        sf_dir,
-        lambda: build_filter(_bloom_eval_keys(spark, sf_dir), "s"),
-    )
+    return build_filter(_bloom_eval_keys(spark, sf_dir), "s")
 
 
+@_session_kernel
 def _bloom_eval_sharded_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sharded twin of :func:`_bloom_eval_filter` (4 shards x 4096 bits,
     dd_bloom_sharded_decontaminate's exact build parameters)."""
@@ -6728,144 +6690,104 @@ def _bloom_eval_sharded_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_sharded_filter,
     )
 
-    return _session_memo(
-        _BLOOM_EVAL_SHARDED_CACHE,
-        spark,
-        sf_dir,
-        lambda: build_sharded_filter(
-            _bloom_eval_keys(spark, sf_dir), "s", n_shards=4, m_bits=4096
-        ),
+    return build_sharded_filter(
+        _bloom_eval_keys(spark, sf_dir), "s", n_shards=4, m_bits=4096
     )
 
 
-_TOKEN_ARRAYS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@_session_kernel(widen=True)
 def _token_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, _ts: token array) over documents — the shared tokenized
     corpus of the LM ladder (unigram/bigram perplexity, Kneser-Ney, PMI),
     the span/chunk/index gates, and the token-statistics family. The
     _doc_shingles amortization applied one level down: ~15 gates tokenize
     the identical corpus with the identical `tokens` expression, so one
-    scan+split materializes once per (session, sf) and every consumer
-    reads the checkpointed token table instead of re-reading and
-    re-splitting the parquet text column."""
+    scan+split materializes once per session and every consumer reads
+    the checkpointed token table instead of re-reading and re-splitting
+    the parquet text column."""
     from strava_vector_search_spark.operators.dedup import tokens
 
-    return _session_memo(
-        _TOKEN_ARRAYS_CACHE,
-        spark,
-        sf_dir,
-        lambda: load_table(spark, sf_dir, "documents").select(
-            "doc_id", tokens(F.col("text")).alias("_ts")
-        ),
-        widen=True,
+    return load_table(spark, sf_dir, "documents").select(
+        "doc_id", tokens(F.col("text")).alias("_ts")
     )
 
 
-_UNIGRAM_COUNTS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@_session_kernel
 def _unigram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(t, cnt) corpus unigram counts — the vocab table of the LM family,
     built from :func:`_token_arrays` (one explode + one map-side-combined
     aggregate, shared by perplexity / PMI / Zipf consumers)."""
-    return _session_memo(
-        _UNIGRAM_COUNTS_CACHE,
-        spark,
-        sf_dir,
-        lambda: _token_arrays(spark, sf_dir)
+    return (
+        _token_arrays(spark, sf_dir)
         .select(F.explode("_ts").alias("t"))
         .groupBy("t")
-        .agg(F.count(F.lit(1)).alias("cnt")),
+        .agg(F.count(F.lit(1)).alias("cnt"))
     )
 
 
-_BIGRAM_COUNTS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@_session_kernel
 def _bigram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(w1, w2, c12) corpus bigram counts from the map-only
     index-transform zip over :func:`_token_arrays` — shared by
     tx_bigram_perplexity and tx_kneser_ney (whose marginals all derive
     from this table, never a second corpus pass)."""
-
-    def _build() -> DataFrame:
-        tok = _token_arrays(spark, sf_dir).filter(F.size("_ts") >= 2)
-        pairs = F.transform(
-            F.sequence(F.lit(1), F.size("_ts") - 1),
-            lambda i: F.struct(
-                F.element_at("_ts", i).alias("w1"),
-                F.element_at("_ts", i + 1).alias("w2"),
-            ),
-        )
-        return (
-            tok.select(F.explode(pairs).alias("p"))
-            .select("p.w1", "p.w2")
-            .groupBy("w1", "w2")
-            .agg(F.count(F.lit(1)).alias("c12"))
-        )
-
-    return _session_memo(_BIGRAM_COUNTS_CACHE, spark, sf_dir, _build)
+    tok = _token_arrays(spark, sf_dir).filter(F.size("_ts") >= 2)
+    pairs = F.transform(
+        F.sequence(F.lit(1), F.size("_ts") - 1),
+        lambda i: F.struct(
+            F.element_at("_ts", i).alias("w1"),
+            F.element_at("_ts", i + 1).alias("w2"),
+        ),
+    )
+    return (
+        tok.select(F.explode(pairs).alias("p"))
+        .select("p.w1", "p.w2")
+        .groupBy("w1", "w2")
+        .agg(F.count(F.lit(1)).alias("c12"))
+    )
 
 
-_MD5_EMB768_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@_session_kernel
 def _md5_emb_768(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, embedding: 768-d md5 vectors) over the corpus (doc 0 — the
     gates' query doc — excluded) — the materialized embedding table the
     reference itself maintains (WORKOUTS_WITH_VECTORS,
     02_method2_manual_vector_embedding.sql:88): search gates read stored
-    vectors, they don't re-embed the corpus per query. One memo per
-    (session, sf); already cluster-wide (md5_embedding_table repartitions
-    before densification). vs_topk_filtered_768 deliberately does NOT use
-    it — that gate pins the embed kernel itself under the oracle, with
-    metadata filters pushed BEFORE embedding."""
+    vectors, they don't re-embed the corpus per query. Already
+    cluster-wide (md5_embedding_table repartitions before densification).
+    vs_topk_filtered_768 deliberately does NOT use it — that gate pins
+    the embed kernel itself under the oracle, with metadata filters
+    pushed BEFORE embedding."""
     from strava_vector_search_spark.functions.embed import md5_embedding_table
 
-    return _session_memo(
-        _MD5_EMB768_CACHE,
-        spark,
-        sf_dir,
-        lambda: md5_embedding_table(
-            load_table(spark, sf_dir, "documents").filter(
-                F.col("doc_id") != 0
-            ),
-            "doc_id",
-            "text",
-            dim=768,
-        ),
+    return md5_embedding_table(
+        load_table(spark, sf_dir, "documents").filter(F.col("doc_id") != 0),
+        "doc_id",
+        "text",
+        dim=768,
     )
 
 
-_MD5_EMB768_UNIT_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@_session_kernel
 def _md5_emb_768_unit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """:func:`_md5_emb_768` L2-normalized at index time (the reference's
     normalize-at-write pattern, 02:404 — dot == cosine downstream), zero
-    vectors dropped. Memoized per (session, sf) with ONE stable
-    checkpointed plan — consumers that memoize on plan identity (PQ
-    codebook training) hit their cache across bench reps and across the
-    gate/lean-twin pair, instead of retraining against a fresh
-    localCheckpoint plan every call (the round-10 bench found the m=96
-    Lloyd loop re-running warm at ~26 s/rep for exactly that reason)."""
+    vectors dropped. ONE stable checkpointed plan per session —
+    consumers that memoize on plan identity (PQ codebook training) hit
+    their cache across bench reps and across the gate/lean-twin pair,
+    instead of retraining against a fresh localCheckpoint plan every
+    call (the round-10 bench found the m=96 Lloyd loop re-running warm
+    at ~26 s/rep for exactly that reason)."""
     from strava_vector_search_spark.functions.vector import l2_normalize
 
-    return _session_memo(
-        _MD5_EMB768_UNIT_CACHE,
-        spark,
-        sf_dir,
-        lambda: _md5_emb_768(spark, sf_dir)
+    return (
+        _md5_emb_768(spark, sf_dir)
         .select("doc_id", l2_normalize(F.col("embedding")).alias("embedding"))
-        .filter(F.col("embedding").isNotNull()),
+        .filter(F.col("embedding").isNotNull())
     )
 
 
-_MD5U768_STORED_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@_session_kernel(widen=True)
 def _md5_emb_768_unit_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """:func:`_md5_emb_768_unit` as a STORED artifact read back from
     parquet — the production corpus shape (the reference maintains
@@ -6882,18 +6804,10 @@ def _md5_emb_768_unit_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     path = _cached_layout(sf_dir, "documents", "md5u768_v1", _build)
-    return _session_memo(
-        _MD5U768_STORED_CACHE,
-        spark,
-        sf_dir,
-        lambda: spark.read.parquet(path),
-        widen=True,
-    )
+    return spark.read.parquet(path)
 
 
-_IVFPQ768_CACHE: dict[tuple[str, str], tuple] = {}
-
-
+@_session_kernel
 def _ivfpq_768_index(spark: SparkSession, sf_dir: str):
     """(emb, cents, books, codes) — the composed IVF+PQ index at width
     768: the unit-normalized corpus carrying its KMeans cluster id
@@ -6906,69 +6820,49 @@ def _ivfpq_768_index(spark: SparkSession, sf_dir: str):
     from strava_vector_search_spark.operators import pq as PQ
     from strava_vector_search_spark.operators.ann import compute_centroids
 
-    app_id = spark.sparkContext.applicationId
-    for stale in [k for k in _IVFPQ768_CACHE if k[0] != app_id]:
-        del _IVFPQ768_CACHE[stale]
-    key = (app_id, sf_dir.rstrip("/"))
-    if key not in _IVFPQ768_CACHE:
-        clustered_raw, _ = _kmeans_ivf_768(spark, sf_dir)
-        emb = (
-            _md5_emb_768_unit(spark, sf_dir)
-            .join(clustered_raw.select("doc_id", "cluster"), "doc_id")
-            .localCheckpoint(eager=False)
-        )
-        cents = compute_centroids(emb, "cluster").localCheckpoint(
-            eager=False
-        )
-        books = PQ.train_codebooks(emb, m=96, id_col="doc_id")
-        codes = PQ.encode_pq(
-            emb, books, id_col="doc_id", keep_cols=("cluster",)
-        ).localCheckpoint(eager=False)
-        _IVFPQ768_CACHE[key] = (emb, cents, books, codes)
-    return _IVFPQ768_CACHE[key]
+    clustered_raw, _ = _kmeans_ivf_768(spark, sf_dir)
+    emb = (
+        _md5_emb_768_unit(spark, sf_dir)
+        .join(clustered_raw.select("doc_id", "cluster"), "doc_id")
+        .localCheckpoint(eager=False)
+    )
+    cents = compute_centroids(emb, "cluster").localCheckpoint(eager=False)
+    books = PQ.train_codebooks(emb, m=96, id_col="doc_id")
+    codes = PQ.encode_pq(
+        emb, books, id_col="doc_id", keep_cols=("cluster",)
+    ).localCheckpoint(eager=False)
+    return emb, cents, books, codes
 
 
-_KMEANS_IVF768_CACHE: dict[tuple[str, str], tuple] = {}
-
-
+@_session_kernel
 def _kmeans_ivf_768(spark: SparkSession, sf_dir: str):
     """(clustered, centroids) — the learned-centroid IVF index at width
     768: seeded 16-cluster MLlib KMeans over :func:`_md5_emb_768`, plus
     its 6-dp DECIMAL-routed centroid table. The fit input is fixed-width
     hash-partitioned and sorted within partitions, so the seeded solution
-    doesn't drift with session parallelism. Memoized per (session, sf)
-    like _md5_emb_768 — the fit is an INDEX BUILD (the reference
-    maintains its vector table once, 02:404); search gates read the
-    built index, they don't re-train per query. Not routed through
-    _session_memo because the cached value is a DataFrame PAIR; the same
-    applicationId eviction applies."""
+    doesn't drift with session parallelism. A session kernel like
+    _md5_emb_768 — the fit is an INDEX BUILD (the reference maintains its
+    vector table once, 02:404); search gates read the built index, they
+    don't re-train per query."""
     from strava_vector_search_spark.operators.ann import (
         compute_centroids,
         kmeans_assign,
     )
 
-    app_id = spark.sparkContext.applicationId
-    for stale in [k for k in _KMEANS_IVF768_CACHE if k[0] != app_id]:
-        del _KMEANS_IVF768_CACHE[stale]
-    key = (app_id, sf_dir.rstrip("/"))
-    if key not in _KMEANS_IVF768_CACHE:
-        clustered = kmeans_assign(
-            _md5_emb_768(spark, sf_dir)
-            .repartition(32, "doc_id")
-            .sortWithinPartitions("doc_id"),
-            num_clusters=16,
-            seed=42,
-        ).localCheckpoint(eager=False)
-        cents = compute_centroids(clustered, "cluster").localCheckpoint(
-            eager=False
-        )
-        _KMEANS_IVF768_CACHE[key] = (clustered, cents)
-    return _KMEANS_IVF768_CACHE[key]
+    clustered = kmeans_assign(
+        _md5_emb_768(spark, sf_dir)
+        .repartition(32, "doc_id")
+        .sortWithinPartitions("doc_id"),
+        num_clusters=16,
+        seed=42,
+    ).localCheckpoint(eager=False)
+    cents = compute_centroids(clustered, "cluster").localCheckpoint(
+        eager=False
+    )
+    return clustered, cents
 
 
-_SEM_PAIRS768_LANG_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@_session_kernel
 def _semantic_pairs_768_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Within-``lang`` SemDeDup pairs (cosine >= 0.9) over the 768-d md5
     corpus — the kernel output, unordered. Shared by
@@ -6976,80 +6870,55 @@ def _semantic_pairs_768_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     is deterministic, so DuckDB replays the exact cell assignment) and
     ``dd_semantic_dedup_768_kmeans`` (which uses these independently
     oracle-verified pairs as the retention reference for the LEARNED
-    cells) — one kernel run per (session, sf) instead of one per gate."""
+    cells) — one kernel run per session instead of one per gate."""
     from strava_vector_search_spark.operators.dedup import (
         semantic_pairs_blas,
     )
 
-    def _build() -> DataFrame:
-        docs = load_table(spark, sf_dir, "documents")
-        emb = _md5_emb_768(spark, sf_dir).join(
-            docs.select("doc_id", "lang"), "doc_id"
-        )
-        return semantic_pairs_blas(
-            emb,
-            cluster_col="lang",
-            id_col="doc_id",
-            vector_col="embedding",
-            threshold=0.9,
-        )
-
-    return _session_memo(_SEM_PAIRS768_LANG_CACHE, spark, sf_dir, _build)
+    docs = load_table(spark, sf_dir, "documents")
+    emb = _md5_emb_768(spark, sf_dir).join(
+        docs.select("doc_id", "lang"), "doc_id"
+    )
+    return semantic_pairs_blas(
+        emb,
+        cluster_col="lang",
+        id_col="doc_id",
+        vector_col="embedding",
+        threshold=0.9,
+    )
 
 
-_BPE6_CACHE: dict[tuple[str, str], tuple] = {}
-
-
+@_session_kernel
 def _bpe6(spark: SparkSession, sf_dir: str):
     """The 6-merge BPE training artifact pair (merge list, final symbol
     state) over documents — tx_bpe_merges ships the merges,
     tx_bpe_encode_stats reads the final state; both ran the IDENTICAL
     6-round driver loop (each round one pair aggregate + one greedy
-    merge window + a collect), so one training serves both. Not routed
-    through _session_memo because the cached value is a (list,
-    DataFrame) pair, but the same applicationId eviction applies; the
-    state DataFrame is already checkpointed per round by the trainer."""
+    merge window + a collect), so one training serves both. The state
+    DataFrame is already checkpointed per round by the trainer."""
     from strava_vector_search_spark.operators.bpe import train_bpe_with_state
 
-    app_id = spark.sparkContext.applicationId
-    for stale in [k for k in _BPE6_CACHE if k[0] != app_id]:
-        del _BPE6_CACHE[stale]
-    key = (app_id, sf_dir.rstrip("/"))
-    if key not in _BPE6_CACHE:
-        docs = load_table(spark, sf_dir, "documents")
-        _BPE6_CACHE[key] = train_bpe_with_state(docs, "text", num_merges=6)
-    return _BPE6_CACHE[key]
+    docs = load_table(spark, sf_dir, "documents")
+    return train_bpe_with_state(docs, "text", num_merges=6)
 
 
-_TRADE_GRAPH_PREP_CACHE: dict[tuple[str, str], tuple] = {}
-
-
+@_session_kernel
 def _trade_graph_prep(spark: SparkSession, sf_dir: str) -> tuple:
-    """Memoized seed-independent PageRank prep over the SYMMETRIC trade
-    graph — ``(edeg, base_nodes, n_nodes)`` from
+    """Seed-independent PageRank prep over the SYMMETRIC trade graph —
+    ``(edeg, base_nodes, n_nodes)`` from
     :func:`operators.graph.prepare_pagerank_graph`. g_pagerank and g_ppr
-    iterate over the identical edge set; without the memo each gate
+    iterate over the identical edge set; without the kernel each gate
     re-paid the prep's three checkpoint plannings plus the node-count
-    job at every construction (once per bench rep). Same keying and
-    stale-applicationId eviction as :func:`_trade_pairs` (a checkpointed
-    DataFrame is only valid within its own session)."""
+    job at every construction (once per bench rep)."""
     from strava_vector_search_spark.operators.graph import (
         prepare_pagerank_graph,
     )
 
-    app_id = spark.sparkContext.applicationId
-    for stale in [k for k in _TRADE_GRAPH_PREP_CACHE if k[0] != app_id]:
-        del _TRADE_GRAPH_PREP_CACHE[stale]
-    key = (app_id, sf_dir.rstrip("/"))
-    if key not in _TRADE_GRAPH_PREP_CACHE:
-        pairs = _trade_pairs(spark, sf_dir)
-        edges = pairs.select(
-            F.col("c").alias("src"), F.col("s").alias("dst")
-        ).union(
-            pairs.select(F.col("s").alias("src"), F.col("c").alias("dst"))
-        )
-        _TRADE_GRAPH_PREP_CACHE[key] = prepare_pagerank_graph(edges)
-    return _TRADE_GRAPH_PREP_CACHE[key]
+    pairs = _trade_pairs(spark, sf_dir)
+    edges = pairs.select(F.col("c").alias("src"), F.col("s").alias("dst")).union(
+        pairs.select(F.col("s").alias("src"), F.col("c").alias("dst"))
+    )
+    return prepare_pagerank_graph(edges)
 
 
 def g_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -13019,11 +12888,9 @@ def ev_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
 QUERIES.update({"ev_markov_stationary": ev_markov_stationary})
 
 
-_MD5_QUERY_VEC_768_CACHE: dict[tuple[str, int], list[float]] = {}
-
-
+@_session_kernel
 def _md5_query_vec_768(
-    spark: SparkSession, sf_dir: str, gate: str, doc_id: int = 0
+    spark: SparkSession, sf_dir: str, doc_id: int = 0
 ) -> list[float]:
     """Doc ``doc_id``'s text embedded DRIVER-SIDE through the md5 kernel
     twin (md5_embed_text_local — the production client pattern: embed the
@@ -13036,17 +12903,13 @@ def _md5_query_vec_768(
     against a zero query would raise DIVIDE_BY_ZERO under ANSI with no
     hint of the cause.
 
-    Memoized per (sf_dir, doc_id) like :func:`_query_vec`: the vector is
-    a pure function of the parquet file, and the unmemoized form re-paid
-    a 1-row scan job plus the 768-d local embed at every gate
-    construction (once per bench rep across ~20 consumers)."""
+    A session kernel per doc_id like :func:`_query_vec`, shared by every
+    768-d gate: unshared, it re-paid a 1-row scan job plus the 768-d
+    local embed at every gate construction."""
     from strava_vector_search_spark.functions.embed import (
         md5_embed_text_local,
     )
 
-    key = (sf_dir.rstrip("/"), doc_id)
-    if key in _MD5_QUERY_VEC_768_CACHE:
-        return _MD5_QUERY_VEC_768_CACHE[key]
     qrow = (
         load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") == doc_id)
@@ -13055,17 +12918,16 @@ def _md5_query_vec_768(
     )
     if qrow is None or not qrow["text"]:
         raise ValueError(
-            f"{gate}: doc_id {doc_id} missing or text-less in {sf_dir} — "
-            "the gate embeds its text as the query vector"
+            f"doc_id {doc_id} missing or text-less in {sf_dir} — the 768-d "
+            "gates embed its text as the query vector"
         )
     qv = md5_embed_text_local(qrow["text"], dim=768)
     if not any(qv):
         raise ValueError(
-            f"{gate}: doc_id {doc_id}'s text has no [a-z0-9] tokens with "
+            f"doc_id {doc_id}'s text has no [a-z0-9] tokens with "
             f"non-zero weight in {sf_dir} — its embedding is the zero "
             "vector (full-cosine scoring would divide by zero under ANSI)"
         )
-    _MD5_QUERY_VEC_768_CACHE[key] = qv
     return qv
 
 
@@ -13113,7 +12975,7 @@ def vs_topk_filtered_768(spark: SparkSession, sf_dir: str) -> DataFrame:
     # driver (the testdata analogue of embedding the query string,
     # 02:206-208, done client-side); exact-integer buckets make the
     # local twin bit-identical to the table kernel
-    qv = _md5_query_vec_768(spark, sf_dir, "vs_topk_filtered_768")
+    qv = _md5_query_vec_768(spark, sf_dir)
     top = S.brute_force_topk_blas(
         corpus, qv, k=10, assume_normalized=False, payload=False
     )
@@ -13159,7 +13021,7 @@ def ann_ivf_topk_768(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(docs.select("doc_id", "lang"), "doc_id")
         .localCheckpoint(eager=False)
     )
-    qv = _md5_query_vec_768(spark, sf_dir, "ann_ivf_topk_768")
+    qv = _md5_query_vec_768(spark, sf_dir)
     out = ivf_topk(
         emb, qv, k=10, nprobe=2, cluster_col="lang", id_col="doc_id"
     )
@@ -13311,7 +13173,7 @@ def svc_search_dsl_768(spark: SparkSession, sf_dir: str) -> DataFrame:
         dim=768,
         assume_normalized=False,
     ).attach_embeddings(_md5_emb_768(spark, sf_dir), vec_id_col="doc_id")
-    qv = _md5_query_vec_768(spark, sf_dir, "svc_search_dsl_768")
+    qv = _md5_query_vec_768(spark, sf_dir)
     request = {
         "query_vec": qv,
         "columns": ["lang", "source", "n_chars"],
@@ -14456,9 +14318,7 @@ def ev_retention_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 QUERIES.update({"ev_retention_matrix": ev_retention_matrix})
 
 
-_KMEANS_IVF768_HI_CACHE: dict[tuple[str, str], tuple] = {}
-
-
+@_session_kernel
 def _kmeans_ivf_768_hi(spark: SparkSession, sf_dir: str):
     """(clustered, centroids, k_hi) — the PRODUCTION-SIZED coarse
     quantizer over the md5-768 corpus: ``k_hi = max(64,
@@ -14468,31 +14328,25 @@ def _kmeans_ivf_768_hi(spark: SparkSession, sf_dir: str):
     sqrt-N cells let the scanned fraction FALL as the corpus grows —
     the property that keeps the ANN serve path viable at 100 TB
     (reference regime "1M+ documents: consider approximate search",
-    02_method2_manual_vector_embedding.sql:438-442). Same memoization
-    and fixed-width fit partitioning as :func:`_kmeans_ivf_768`."""
+    02_method2_manual_vector_embedding.sql:438-442). Same fixed-width fit
+    partitioning as :func:`_kmeans_ivf_768`."""
     from strava_vector_search_spark.operators.ann import (
         compute_centroids,
         default_ivf_cells,
         kmeans_assign,
     )
 
-    app_id = spark.sparkContext.applicationId
-    for stale in [k for k in _KMEANS_IVF768_HI_CACHE if k[0] != app_id]:
-        del _KMEANS_IVF768_HI_CACHE[stale]
-    key = (app_id, sf_dir.rstrip("/"))
-    if key not in _KMEANS_IVF768_HI_CACHE:
-        emb = _md5_emb_768(spark, sf_dir)
-        k_hi = max(64, default_ivf_cells(emb.count()))
-        clustered = kmeans_assign(
-            emb.repartition(32, "doc_id").sortWithinPartitions("doc_id"),
-            num_clusters=k_hi,
-            seed=42,
-        ).localCheckpoint(eager=False)
-        cents = compute_centroids(clustered, "cluster").localCheckpoint(
-            eager=False
-        )
-        _KMEANS_IVF768_HI_CACHE[key] = (clustered, cents, k_hi)
-    return _KMEANS_IVF768_HI_CACHE[key]
+    emb = _md5_emb_768(spark, sf_dir)
+    k_hi = max(64, default_ivf_cells(emb.count()))
+    clustered = kmeans_assign(
+        emb.repartition(32, "doc_id").sortWithinPartitions("doc_id"),
+        num_clusters=k_hi,
+        seed=42,
+    ).localCheckpoint(eager=False)
+    cents = compute_centroids(clustered, "cluster").localCheckpoint(
+        eager=False
+    )
+    return clustered, cents, k_hi
 
 
 def _ivf_quality(spark, clustered, cents, queries, qids, k, nprobe, full):
@@ -14629,9 +14483,7 @@ def ann_ivf_cells_scaling_768(spark: SparkSession, sf_dir: str) -> DataFrame:
 QUERIES.update({"ann_ivf_cells_scaling_768": ann_ivf_cells_scaling_768})
 
 
-_PLANTED_IVF768_CACHE: dict[tuple[str, str], tuple] = {}
-
-
+@_session_kernel
 def _planted_ivf_768(spark: SparkSession, sf_dir: str):
     """(clustered, centroids) — a 96-cell learned IVF over a corpus with
     PLANTED cluster structure: doc ``topic = doc_id % 96``, embedding =
@@ -14647,59 +14499,51 @@ def _planted_ivf_768(spark: SparkSession, sf_dir: str):
         kmeans_assign,
     )
 
-    app_id = spark.sparkContext.applicationId
-    for stale in [k for k in _PLANTED_IVF768_CACHE if k[0] != app_id]:
-        del _PLANTED_IVF768_CACHE[stale]
-    key = (app_id, sf_dir.rstrip("/"))
-    if key not in _PLANTED_IVF768_CACHE:
-        n_topics, eps = 96, 0.3
-        docs = load_table(spark, sf_dir, "documents").select("doc_id")
-        idx = F.sequence(F.lit(1), F.lit(768))
+    n_topics, eps = 96, 0.3
+    docs = load_table(spark, sf_dir, "documents").select("doc_id")
+    idx = F.sequence(F.lit(1), F.lit(768))
 
-        def u01(prefix, key_col, i):
-            # md5-driven uniform in [-0.5, 0.5): the same
-            # hash-as-deterministic-randomness idiom as the md5 embedder
-            return (
-                F.conv(
-                    F.substring(
-                        F.md5(
-                            F.concat_ws(
-                                "_",
-                                F.lit(prefix),
-                                key_col.cast("string"),
-                                i.cast("string"),
-                            )
-                        ),
-                        1,
-                        6,
+    def u01(prefix, key_col, i):
+        # md5-driven uniform in [-0.5, 0.5): the same
+        # hash-as-deterministic-randomness idiom as the md5 embedder
+        return (
+            F.conv(
+                F.substring(
+                    F.md5(
+                        F.concat_ws(
+                            "_",
+                            F.lit(prefix),
+                            key_col.cast("string"),
+                            i.cast("string"),
+                        )
                     ),
-                    16,
-                    10,
-                ).cast("double")
-                / F.lit(float(16**6))
-                - 0.5
-            )
+                    1,
+                    6,
+                ),
+                16,
+                10,
+            ).cast("double")
+            / F.lit(float(16**6))
+            - 0.5
+        )
 
-        emb = docs.withColumn(
-            "topic", F.col("doc_id") % n_topics
-        ).select(
-            "doc_id",
-            F.transform(
-                idx,
-                lambda i: u01("c", F.col("topic"), i)
-                + F.lit(eps) * u01("n", F.col("doc_id"), i),
-            ).alias("embedding"),
-        )
-        clustered = kmeans_assign(
-            emb.repartition(32, "doc_id").sortWithinPartitions("doc_id"),
-            num_clusters=n_topics,
-            seed=42,
-        ).localCheckpoint(eager=False)
-        cents = compute_centroids(clustered, "cluster").localCheckpoint(
-            eager=False
-        )
-        _PLANTED_IVF768_CACHE[key] = (clustered, cents)
-    return _PLANTED_IVF768_CACHE[key]
+    emb = docs.withColumn("topic", F.col("doc_id") % n_topics).select(
+        "doc_id",
+        F.transform(
+            idx,
+            lambda i: u01("c", F.col("topic"), i)
+            + F.lit(eps) * u01("n", F.col("doc_id"), i),
+        ).alias("embedding"),
+    )
+    clustered = kmeans_assign(
+        emb.repartition(32, "doc_id").sortWithinPartitions("doc_id"),
+        num_clusters=n_topics,
+        seed=42,
+    ).localCheckpoint(eager=False)
+    cents = compute_centroids(clustered, "cluster").localCheckpoint(
+        eager=False
+    )
+    return clustered, cents
 
 
 def ann_ivf_clustered_recall_768(
@@ -14897,9 +14741,7 @@ QUERIES.update(
 )
 
 
-_RESIDUAL_IVFPQ768_CACHE: dict[tuple[str, str], tuple] = {}
-
-
+@_session_kernel
 def _planted_residual_ivfpq_768(spark: SparkSession, sf_dir: str):
     """(clustered, cents, raw_books, raw_codes, res_books, res_codes) —
     the raw-vs-residual PQ pair over the planted-structure 768-d corpus
@@ -14911,34 +14753,24 @@ def _planted_residual_ivfpq_768(spark: SparkSession, sf_dir: str):
     held at 16 (not the production 256) so the comparison stays
     discriminative at gate corpus size: with more codebook centroids
     than sample rows the raw lane memorizes the corpus and both errors
-    vanish. Session-cached like the sibling index kernels."""
+    vanish."""
     from strava_vector_search_spark.operators import pq as PQ
 
-    app_id = spark.sparkContext.applicationId
-    for stale in [k for k in _RESIDUAL_IVFPQ768_CACHE if k[0] != app_id]:
-        del _RESIDUAL_IVFPQ768_CACHE[stale]
-    key = (app_id, sf_dir.rstrip("/"))
-    if key not in _RESIDUAL_IVFPQ768_CACHE:
-        m, kk = 96, 16
-        clustered, cents = _planted_ivf_768(spark, sf_dir)
-        raw_books = PQ.train_codebooks(
-            clustered, m=m, k=kk, id_col="doc_id"
-        )
-        raw_codes = PQ.encode_pq(
-            clustered, raw_books, id_col="doc_id", keep_cols=("cluster",)
-        ).localCheckpoint(eager=False)
-        res = PQ.residualize(clustered, cents)
-        res_books = PQ.train_codebooks(
-            res, m=m, k=kk, vector_col="residual", id_col="doc_id"
-        )
-        res_codes = PQ.encode_pq(
-            res, res_books, vector_col="residual", id_col="doc_id",
-            keep_cols=("cluster",),
-        ).localCheckpoint(eager=False)
-        _RESIDUAL_IVFPQ768_CACHE[key] = (
-            clustered, cents, raw_books, raw_codes, res_books, res_codes,
-        )
-    return _RESIDUAL_IVFPQ768_CACHE[key]
+    m, kk = 96, 16
+    clustered, cents = _planted_ivf_768(spark, sf_dir)
+    raw_books = PQ.train_codebooks(clustered, m=m, k=kk, id_col="doc_id")
+    raw_codes = PQ.encode_pq(
+        clustered, raw_books, id_col="doc_id", keep_cols=("cluster",)
+    ).localCheckpoint(eager=False)
+    res = PQ.residualize(clustered, cents)
+    res_books = PQ.train_codebooks(
+        res, m=m, k=kk, vector_col="residual", id_col="doc_id"
+    )
+    res_codes = PQ.encode_pq(
+        res, res_books, vector_col="residual", id_col="doc_id",
+        keep_cols=("cluster",),
+    ).localCheckpoint(eager=False)
+    return clustered, cents, raw_books, raw_codes, res_books, res_codes
 
 
 def ann_ivfpq_residual_768(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -17,7 +17,8 @@ SF_DIR = os.environ.get("TEST_SF_DIR", "/root/testdata/sf0.001")
 # attestation run completes within budget. Regenerate with:
 #   python -m pytest tests/ -q --durations=0 -m "slow or not slow"
 # and update tests/slow_manifest.txt with the >= 3 s node ids.
-_SLOW_MANIFEST = os.path.join(os.path.dirname(__file__), "slow_manifest.txt")
+_TESTS_DIR = os.path.dirname(os.path.abspath(__file__))
+_SLOW_MANIFEST = os.path.join(_TESTS_DIR, "slow_manifest.txt")
 
 
 def pytest_collection_modifyitems(config, items):
@@ -27,9 +28,12 @@ def pytest_collection_modifyitems(config, items):
     except OSError:
         return
     for item in items:
-        # nodeid relative to tests/: "test_x.py::test_name[param]" —
-        # match on the function id so parametrized cases follow suit
-        nid = item.nodeid.split("/")[-1]
+        # nodeid relative to tests/: "test_x.py::test_name[param]", or
+        # "sub/test_x.py::..." below it, so same-named files in different
+        # directories stay distinct; match on the function id too so
+        # parametrized cases follow suit
+        rel = os.path.relpath(str(item.path), _TESTS_DIR).replace(os.sep, "/")
+        nid = rel + item.nodeid[item.nodeid.index("::"):]
         base = nid.split("[", 1)[0]
         if nid in slow or base in slow:
             item.add_marker(pytest.mark.slow)

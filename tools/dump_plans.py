@@ -3,11 +3,20 @@ checks of the execution properties the engine is designed around
 (filter pushdown to the scan, broadcast joins for small sides,
 TakeOrderedAndProject for top-k, no superfluous exchanges).
 
-Usage: python tools/dump_plans.py  (writes PLANS.md at the repo root)
+Usage:
+    python tools/dump_plans.py        # writes PLANS.md at the repo root
+    python tools/dump_plans.py --explain LABEL --out plans/rNN GATE...
+
+The second form writes ``<out>/<gate>_<LABEL>.txt`` with each gate's
+``explain('formatted')`` plan, planned in the session bench.py uses; run
+it with LABEL=before at the parent commit and LABEL=after at HEAD to
+record a round's plan claims (plans/r12 and plans/r13 were dumped with
+SF_DIR at scale factor 0.1; their file names list the gates).
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import re
 import sys
@@ -695,7 +704,7 @@ EXPECTATIONS: dict[str, dict] = {
     },
     "semantic_pairs_blas_kernel": {
         # the SemDeDup pair kernel invoked DIRECTLY (plan-only section —
-        # the gates read its session-memoized checkpoint, which hides
+        # the gates read its @_session_kernel checkpoint, which hides
         # this shape): rank-dense block packing partial-combines, one
         # Arrow-batched float64 matmul per block pair, the block-pair
         # join is the designed within-cell quadratic — never a cartesian
@@ -1066,10 +1075,11 @@ EXPECTATIONS: dict[str, dict] = {
     },
     "ev_markov_stationary": {
         # events fold ONCE into the |states|^2 transition kernel (r13:
-        # the user_id-keyed sessionize windows live inside the shared
-        # _markov_transition_counts checkpoint, so the VISIBLE plan
-        # starts at its Scan ExistingRDD leaf — the window discipline is
-        # asserted on ev_session_paths, which keeps the full pipeline);
+        # the user_id-keyed sessionize windows live inside the
+        # @_session_kernel checkpoint of _markov_transition_counts, so
+        # the VISIBLE plan starts at its Scan ExistingRDD leaf — the
+        # window discipline is asserted on ev_session_paths, which keeps
+        # the full pipeline);
         # the fixed-point iteration runs on the tiny kernel via a 1-row
         # broadcast (BroadcastNestedLoopJoin), never a cartesian
         "partial_agg": "partial_",
@@ -1146,8 +1156,8 @@ EXPECTATIONS: dict[str, dict] = {
         "no_cartesian": "!CartesianProduct",
     },
     "ev_markov_stationary": {
-        # ONE corpus shuffle (the session kernel — r13: behind the
-        # shared _markov_transition_counts checkpoint leaf); the power
+        # ONE corpus shuffle (r13: behind the @_session_kernel
+        # checkpoint leaf of _markov_transition_counts); the power
         # iteration runs over the |states|^2 kernel with
         # partial-combined sums
         "partial_agg": "partial_sum",
@@ -1194,7 +1204,7 @@ EXPECTATIONS: dict[str, dict] = {
 }
 
 
-def main() -> None:
+def audit() -> None:
     spark = get_spark("plans", master="local[8]", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     lines = [
@@ -1255,6 +1265,46 @@ def main() -> None:
     print(f"wrote {out}; {len(failures)} failed checks: {failures}")
     spark.stop()
     sys.exit(1 if failures else 0)
+
+
+def explain(label: str, out_dir: str, gates: list[str]) -> None:
+    os.makedirs(out_dir, exist_ok=True)
+    spark = get_spark("dump-plans")
+    spark.sparkContext.setLogLevel("FATAL")
+    for name in gates:
+        fn = QUERIES.get(name)
+        if fn is None:
+            print(f"SKIP {name}: not declared", flush=True)
+            continue
+        try:
+            df = fn(spark, SF_DIR)
+            plan = df._sc._jvm.PythonSQLUtils.explainString(
+                df._jdf.queryExecution(), "formatted"
+            )
+        except Exception as e:  # noqa: BLE001
+            plan = f"ERROR building {name}: {type(e).__name__}: {e}"
+        path = os.path.join(out_dir, f"{name}_{label}.txt")
+        with open(path, "w") as fh:
+            fh.write(f"# {name} — {label} (sf_dir={SF_DIR})\n\n")
+            fh.write(plan)
+        print(f"wrote {path}", flush=True)
+    spark.stop()
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--explain", metavar="LABEL", help="dump formatted plans")
+    ap.add_argument("--out", metavar="DIR", help="directory for --explain")
+    ap.add_argument("gates", nargs="*", help="gates for --explain")
+    args = ap.parse_args()
+    if args.explain is None:
+        if args.out or args.gates:
+            ap.error("--out and gates need --explain")
+        audit()
+    elif not args.out or not args.gates:
+        ap.error("--explain needs --out and at least one gate")
+    else:
+        explain(args.explain, args.out, args.gates)
 
 
 if __name__ == "__main__":
