@@ -98,31 +98,6 @@ def ann_kmeans_ivf_topk_768_bench(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-def _pq768_artifact_path(spark: SparkSession, sf_dir: str) -> str:
-    """Path of the persisted IVF+PQ-768 artifact under the fingerprinted
-    /tmp layout protocol, building it once per corpus generation on a
-    miss — the one build-or-locate step every load-and-serve twin and
-    the service attach share."""
-    from strava_vector_search_spark.operators import pq as PQ
-    from strava_vector_search_spark.queries import (
-        _cached_layout,
-        _ivfpq_768_index,
-    )
-
-    def _build(tmp: str) -> None:
-        _emb, cents_b, books_b, codes_b = _ivfpq_768_index(spark, sf_dir)
-        PQ.write_pq_index(
-            codes_b,
-            books_b,
-            tmp,
-            id_col="doc_id",
-            cluster_col="cluster",
-            centroids=cents_b,
-        )
-
-    return _cached_layout(sf_dir, "documents", "pq768_m96c16v1", _build)
-
-
 def _loaded_pq768(spark: SparkSession, sf_dir: str):
     """(books, codes, cents, emb) — the PERSISTED IVF+PQ-768 artifact
     (built once per corpus generation under the fingerprinted /tmp
@@ -133,9 +108,10 @@ def _loaded_pq768(spark: SparkSession, sf_dir: str):
     from strava_vector_search_spark.operators import pq as PQ
     from strava_vector_search_spark.queries import (
         _md5_emb_768_unit_stored,
+        _pq768_path,
     )
 
-    path = _pq768_artifact_path(spark, sf_dir)
+    path = _pq768_path(spark, sf_dir)
     books, codes, cents, _meta = PQ.load_pq_index(spark, path)
     # fat vectors for the exact rescore come off disk too — a serving
     # session loads the stored corpus table, it never re-embeds
@@ -146,24 +122,11 @@ def svc_search_approx_768_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate service serve path once: attach the persisted IVF+PQ
     artifact, one filtered search_approx. The exact-path comparison
     harness stays in the correctness gate."""
-    from strava_vector_search_spark.queries import (
-        _md5_emb_768_unit_stored,
-    )
-    from strava_vector_search_spark.service import SearchService
+    from strava_vector_search_spark.queries import _pq768_path, _svc_768
 
-    docs = load_table(spark, sf_dir, "documents")
-    svc = SearchService(
-        spark,
-        docs,
-        id_col="doc_id",
-        search_col="text",
-        attributes=("lang", "source", "n_chars"),
-        dim=768,
-        assume_normalized=True,
-    ).attach_embeddings(
-        _md5_emb_768_unit_stored(spark, sf_dir), vec_id_col="doc_id"
+    svc = _svc_768(spark, sf_dir, unit=True).attach_pq_index(
+        _pq768_path(spark, sf_dir)
     )
-    svc.attach_pq_index(_pq768_artifact_path(spark, sf_dir))
     qrow = svc.embeddings.filter(F.col("doc_id") == 3).head()
     qv = [float(x) for x in qrow["embedding"]]
     return svc.search_approx(
@@ -185,24 +148,11 @@ def svc_search_approx_batch_768_bench(
     artifact, ONE search_approx_batch over 3 requests (two sharing a
     filter body -> one shared ADC pass). The sequential-parity harness
     stays in the correctness gate."""
-    from strava_vector_search_spark.queries import (
-        _md5_emb_768_unit_stored,
-    )
-    from strava_vector_search_spark.service import SearchService
+    from strava_vector_search_spark.queries import _pq768_path, _svc_768
 
-    docs = load_table(spark, sf_dir, "documents")
-    svc = SearchService(
-        spark,
-        docs,
-        id_col="doc_id",
-        search_col="text",
-        attributes=("lang", "source", "n_chars"),
-        dim=768,
-        assume_normalized=True,
-    ).attach_embeddings(
-        _md5_emb_768_unit_stored(spark, sf_dir), vec_id_col="doc_id"
+    svc = _svc_768(spark, sf_dir, unit=True).attach_pq_index(
+        _pq768_path(spark, sf_dir)
     )
-    svc.attach_pq_index(_pq768_artifact_path(spark, sf_dir))
     qrows = {
         r["doc_id"]: [float(x) for x in r["embedding"]]
         for r in svc.embeddings.filter(F.col("doc_id").isin(3, 7)).collect()
@@ -376,19 +326,10 @@ def svc_search_batch_kmeans_768_bench(
     from strava_vector_search_spark.queries import (
         _cached_layout,
         _md5_emb_768,
+        _svc_768,
     )
-    from strava_vector_search_spark.service import SearchService
 
-    docs = load_table(spark, sf_dir, "documents")
-    svc = SearchService(
-        spark,
-        docs,
-        id_col="doc_id",
-        search_col="text",
-        attributes=("lang", "source", "n_chars"),
-        dim=768,
-        assume_normalized=False,
-    ).attach_embeddings(_md5_emb_768(spark, sf_dir), vec_id_col="doc_id")
+    svc = _svc_768(spark, sf_dir)
 
     def _build(tmp: str) -> None:
         svc.build_ivf(tmp, cluster_col=None, n_clusters=16, seed=42)

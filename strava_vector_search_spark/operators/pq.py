@@ -591,6 +591,7 @@ def ivfpq_topk(
     id_col: str = "vec_id",
     centroids: DataFrame | None = None,
     residual: bool = False,
+    assume_normalized: bool = True,
 ) -> DataFrame:
     """IVF + PQ composed — the standard billion-scale ANN recipe (FAISS
     IVFPQ): IVF prunes WHICH codes are scanned (cluster semi-join →
@@ -606,6 +607,10 @@ def ivfpq_topk(
     :func:`residualize` output (true IVFADC) — ADC adds each probed
     cell's q·centroid scalar; the probed centroid VECTORS are collected
     (bounded by nprobe) to compute the offsets.
+
+    ``assume_normalized`` is passed to the exact rescore
+    (:func:`brute_force_topk`): False scores full cosine, for stored
+    vectors that are not unit length.
     """
     from strava_vector_search_spark.operators.ann import compute_centroids
 
@@ -643,7 +648,7 @@ def ivfpq_topk(
         k=k,
         vector_col=vector_col,
         id_col=id_col,
-        assume_normalized=True,
+        assume_normalized=assume_normalized,
     )
 
 

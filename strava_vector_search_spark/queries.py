@@ -6834,6 +6834,53 @@ def _ivfpq_768_index(spark: SparkSession, sf_dir: str):
     return emb, cents, books, codes
 
 
+def _pq768_path(spark: SparkSession, sf_dir: str) -> str:
+    """Path of the persisted IVF+PQ-768 artifact (:func:`_ivfpq_768_index`
+    written by operators/pq.write_pq_index) under the fingerprinted /tmp
+    layout protocol, built once per corpus generation on a miss — the one
+    build-or-locate step every load-and-serve gate and twin shares."""
+    from strava_vector_search_spark.operators import pq as PQ
+
+    def _build(tmp: str) -> None:
+        _emb, cents, books, codes = _ivfpq_768_index(spark, sf_dir)
+        PQ.write_pq_index(
+            codes,
+            books,
+            tmp,
+            id_col="doc_id",
+            cluster_col="cluster",
+            centroids=cents,
+        )
+
+    return _cached_layout(sf_dir, "documents", "pq768_m96c16v1", _build)
+
+
+def _svc_768(spark: SparkSession, sf_dir: str, unit: bool = False):
+    """The 768-d SearchService the svc_*_768 gates serve from: documents
+    with the (lang, source, n_chars) ATTRIBUTES and the md5-768
+    embeddings attached — the raw :func:`_md5_emb_768` table scored by
+    full cosine, or with ``unit`` the stored unit table
+    (:func:`_md5_emb_768_unit_stored`, the PQ artifact's encoding)
+    scored by dot product."""
+    from strava_vector_search_spark.service import SearchService
+
+    docs = load_table(spark, sf_dir, "documents")
+    emb = (
+        _md5_emb_768_unit_stored(spark, sf_dir)
+        if unit
+        else _md5_emb_768(spark, sf_dir)
+    )
+    return SearchService(
+        spark,
+        docs,
+        id_col="doc_id",
+        search_col="text",
+        attributes=("lang", "source", "n_chars"),
+        dim=768,
+        assume_normalized=unit,
+    ).attach_embeddings(emb, vec_id_col="doc_id")
+
+
 @_session_kernel
 def _kmeans_ivf_768(spark: SparkSession, sf_dir: str):
     """(clustered, centroids) — the learned-centroid IVF index at width
@@ -13161,18 +13208,7 @@ def svc_search_dsl_768(spark: SparkSession, sf_dir: str) -> DataFrame:
     — previously the service gate (svc_search_nested_dsl) only ran at
     the 64-d test width while the 768-d pins were all Method-2 SQL-path
     gates (02:88; VERDICT r9 stretch item)."""
-    from strava_vector_search_spark.service import SearchService
-
-    docs = load_table(spark, sf_dir, "documents")
-    svc = SearchService(
-        spark,
-        docs,
-        id_col="doc_id",
-        search_col="text",
-        attributes=("lang", "source", "n_chars"),
-        dim=768,
-        assume_normalized=False,
-    ).attach_embeddings(_md5_emb_768(spark, sf_dir), vec_id_col="doc_id")
+    svc = _svc_768(spark, sf_dir)
     qv = _md5_query_vec_768(spark, sf_dir)
     request = {
         "query_vec": qv,
@@ -13212,18 +13248,7 @@ def svc_search_batch_ivf_768(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replays per-request probe → filter → top-k independently and
     unions — pinning batch == N sequential searches value-for-value.
     Layout built once per corpus generation (_cached_layout)."""
-    from strava_vector_search_spark.service import SearchService
-
-    docs = load_table(spark, sf_dir, "documents")
-    svc = SearchService(
-        spark,
-        docs,
-        id_col="doc_id",
-        search_col="text",
-        attributes=("lang", "source", "n_chars"),
-        dim=768,
-        assume_normalized=False,
-    ).attach_embeddings(_md5_emb_768(spark, sf_dir), vec_id_col="doc_id")
+    svc = _svc_768(spark, sf_dir)
 
     def _build(tmp: str) -> None:
         svc.build_ivf(tmp, cluster_col="lang")
@@ -13304,18 +13329,8 @@ def svc_search_batch_kmeans_768(spark: SparkSession, sf_dir: str) -> DataFrame:
     from strava_vector_search_spark.operators.ann import (
         rank_probed_clusters,
     )
-    from strava_vector_search_spark.service import SearchService
 
-    docs = load_table(spark, sf_dir, "documents")
-    svc = SearchService(
-        spark,
-        docs,
-        id_col="doc_id",
-        search_col="text",
-        attributes=("lang", "source", "n_chars"),
-        dim=768,
-        assume_normalized=False,
-    ).attach_embeddings(_md5_emb_768(spark, sf_dir), vec_id_col="doc_id")
+    svc = _svc_768(spark, sf_dir)
 
     def _build(tmp: str) -> None:
         svc.build_ivf(tmp, cluster_col=None, n_clusters=16, seed=42)
@@ -13438,35 +13453,9 @@ def svc_search_approx_768(spark: SparkSession, sf_dir: str) -> DataFrame:
     * ``filter_respected`` — every approximate hit satisfies the DSL
       predicate (pre-filtering cannot leak a filtered row);
     * ``code_bytes`` = 96, ``n_corpus`` data-anchored."""
-    from strava_vector_search_spark.operators import pq as PQ
-    from strava_vector_search_spark.service import SearchService
-
-    docs = load_table(spark, sf_dir, "documents")
-    svc = SearchService(
-        spark,
-        docs,
-        id_col="doc_id",
-        search_col="text",
-        attributes=("lang", "source", "n_chars"),
-        dim=768,
-        assume_normalized=True,
-    ).attach_embeddings(
-        _md5_emb_768_unit_stored(spark, sf_dir), vec_id_col="doc_id"
+    svc = _svc_768(spark, sf_dir, unit=True).attach_pq_index(
+        _pq768_path(spark, sf_dir)
     )
-
-    def _build(tmp: str) -> None:
-        _emb, cents_b, books_b, codes_b = _ivfpq_768_index(spark, sf_dir)
-        PQ.write_pq_index(
-            codes_b,
-            books_b,
-            tmp,
-            id_col="doc_id",
-            cluster_col="cluster",
-            centroids=cents_b,
-        )
-
-    path = _cached_layout(sf_dir, "documents", "pq768_m96c16v1", _build)
-    svc.attach_pq_index(path)
     n_corpus = svc.embeddings.count()
     qrow = svc.embeddings.filter(F.col("doc_id") == 3).head()
     if qrow is None:
@@ -14017,18 +14006,7 @@ def ann_ivfpq_persisted_768(spark: SparkSession, sf_dir: str) -> DataFrame:
     round-trip exactly) is pinned in tests/test_pq.py."""
     from strava_vector_search_spark.operators import pq as PQ
 
-    def _build(tmp: str) -> None:
-        emb_b, cents_b, books_b, codes_b = _ivfpq_768_index(spark, sf_dir)
-        PQ.write_pq_index(
-            codes_b,
-            books_b,
-            tmp,
-            id_col="doc_id",
-            cluster_col="cluster",
-            centroids=cents_b,
-        )
-
-    path = _cached_layout(sf_dir, "documents", "pq768_m96c16v1", _build)
+    path = _pq768_path(spark, sf_dir)
     books, codes, cents, meta = PQ.load_pq_index(spark, path)
     if meta["cluster_col"] != "cluster" or meta["id_col"] != "doc_id":
         raise ValueError(
@@ -14643,35 +14621,9 @@ def svc_search_approx_batch_768(
       predicate rejects (pre-ADC semi-join, slots never consumed);
     * ``code_bytes`` = 96, ``n_requests`` = 3, ``n_corpus``
       data-anchored."""
-    from strava_vector_search_spark.operators import pq as PQ
-    from strava_vector_search_spark.service import SearchService
-
-    docs = load_table(spark, sf_dir, "documents")
-    svc = SearchService(
-        spark,
-        docs,
-        id_col="doc_id",
-        search_col="text",
-        attributes=("lang", "source", "n_chars"),
-        dim=768,
-        assume_normalized=True,
-    ).attach_embeddings(
-        _md5_emb_768_unit_stored(spark, sf_dir), vec_id_col="doc_id"
+    svc = _svc_768(spark, sf_dir, unit=True).attach_pq_index(
+        _pq768_path(spark, sf_dir)
     )
-
-    def _build(tmp: str) -> None:
-        _emb, cents_b, books_b, codes_b = _ivfpq_768_index(spark, sf_dir)
-        PQ.write_pq_index(
-            codes_b,
-            books_b,
-            tmp,
-            id_col="doc_id",
-            cluster_col="cluster",
-            centroids=cents_b,
-        )
-
-    path = _cached_layout(sf_dir, "documents", "pq768_m96c16v1", _build)
-    svc.attach_pq_index(path)
     n_corpus = svc.embeddings.count()
     qrows = {
         r["doc_id"]: [float(x) for x in r["embedding"]]

@@ -13,10 +13,22 @@ filterable ATTRIBUTES + freshness lag) and queries it with a JSON request
   02:406).
 * :class:`SearchService` — ``build()`` materializes the index (select the
   declared columns, embed the search column, write a narrow embeddings
-  parquet partitioned for pruning); ``search(request)`` compiles the DSL,
-  runs the EP1 pipeline (filter → cosine → top-k), and returns rows shaped
-  like the reference's flattened JSON results (one row per hit + rank +
-  similarity), so the reference's post-processing SQL has a 1:1 target.
+  parquet partitioned for pruning). Every lane reads its requests through
+  ONE front end (:meth:`SearchService._parse_requests`: JSON load, query
+  embedding in one job per call, limit, one compiled predicate per
+  distinct filter body, dimension/limit checks) and serves them four ways:
+
+  ========================  =================================================
+  ``search``                single request, exact: filter → cosine → top-k
+  ``search_batch``          many requests, one pruned scan of the IVF layout
+  ``search_approx``         single request, compressed: filter semi-join of
+                            the code table + ``operators/pq.ivfpq_topk``
+  ``search_approx_batch``   many requests, one ADC pass per distinct filter
+  ========================  =================================================
+
+  The single-request lanes return rows shaped like the reference's
+  flattened JSON results (one row per hit + similarity + rank), so the
+  reference's post-processing SQL has a 1:1 target.
 
 Freshness (TARGET_LAG, 01:173) is handled by streaming.refresh.
 """
@@ -33,7 +45,6 @@ from pyspark.sql import functions as F
 
 from strava_vector_search_spark.functions.embed import (
     DEFAULT_DIM,
-    hash_embed_text,
     hash_embedding_table,
 )
 from strava_vector_search_spark.operators.ann import default_ivf_cells
@@ -259,27 +270,35 @@ class SearchService:
         self.ivf_cluster_col = cluster_col
         return self
 
-    def _parse_batch_requests(
-        self, requests: list[dict], k_default: int
-    ) -> tuple[list[tuple], list[Column], bool]:
-        """Shared batch-request front end of :meth:`search_batch` and
-        :meth:`search_approx_batch`: returns (rows, compiled,
-        any_unfiltered) where rows is [(request_id, query_vec, limit,
-        filter_id)], compiled holds one predicate per DISTINCT filter
-        body (requests sharing a filter share an id — expression growth
-        is bounded by distinct filters, not batch size), and filter_id
-        -1 marks unfiltered requests. Text queries embed in ONE table
-        job, not one 1-row collect per request (a 10^4-request batch
-        would otherwise run 10^4 driver-side Spark jobs before the scan
-        even starts)."""
+    def _parse_requests(
+        self, requests: list[dict | str], k_default: int = 10
+    ) -> tuple[list[tuple], list[Column], list[list[str] | None]]:
+        """The one request front end of every serving lane: returns
+        (rows, compiled, columns) where rows is [(request_id, query_vec,
+        limit, filter_id)], compiled holds one predicate per DISTINCT
+        filter body (requests sharing a filter share an id — expression
+        growth is bounded by distinct filters, not batch size; filter_id
+        -1 marks unfiltered requests), and columns is each request's
+        requested projection (None = the service default). Text queries
+        embed in ONE table job, not one 1-row collect per request (a
+        10^4-request batch would otherwise run 10^4 driver-side Spark
+        jobs before the scan even starts). A ``query_vec`` whose length
+        is not the service dim, or a limit below 1, is refused here:
+        scoring zips the query against the stored vectors, so a short
+        vector would otherwise rank on NULL similarities."""
         attrs = set(self.attributes) if self.attributes else None
-        parsed: list[tuple[list[float] | None, dict]] = []
+        parsed: list[tuple[list[float] | None, int, dict]] = []
         texts: list[tuple[int, str]] = []
         for i, req in enumerate(requests):
             if isinstance(req, str):
                 req = json.loads(req)
             if "query_vec" in req:
                 qv = [float(x) for x in req["query_vec"]]
+                if len(qv) != self.dim:
+                    raise ValueError(
+                        f"request {i}: query_vec has {len(qv)} values, "
+                        f"the service dim is {self.dim}"
+                    )
             elif "query" in req:
                 qv = None
                 texts.append((i, req["query"]))
@@ -287,7 +306,13 @@ class SearchService:
                 raise FilterDSLError(
                     "request needs 'query' or 'query_vec'"
                 )
-            parsed.append((qv, req))
+            limit = int(req.get("limit", k_default))
+            if limit < 1:
+                raise ValueError(
+                    f"request {i}: limit {limit} must be >= 1 (service "
+                    f"dim {self.dim})"
+                )
+            parsed.append((qv, limit, req))
         embedded: dict[int, list[float]] = {}
         if texts:
             tdf = self.spark.createDataFrame(
@@ -309,8 +334,7 @@ class SearchService:
         rows = []
         filter_ids: dict[str, int] = {}
         compiled: list[Column] = []
-        any_unfiltered = False
-        for i, (qv, req) in enumerate(parsed):
+        for i, (qv, limit, req) in enumerate(parsed):
             if qv is None:
                 qv = embedded[i]
             flt = req.get("filter")
@@ -323,9 +347,35 @@ class SearchService:
                     compiled.append(compile_filter(flt, attrs))
             else:
                 fid = -1
-                any_unfiltered = True
-            rows.append((i, qv, int(req.get("limit", k_default)), fid))
-        return rows, compiled, any_unfiltered
+            rows.append((i, qv, limit, fid))
+        return rows, compiled, [req.get("columns") for *_, req in parsed]
+
+    def _parse_one(
+        self, request: dict | str
+    ) -> tuple[list[float], int, Column | None, list[str] | None]:
+        """(query_vec, limit, predicate | None, columns | None) of one
+        request, through :meth:`_parse_requests`."""
+        rows, compiled, columns = self._parse_requests([request])
+        ((_i, qv, limit, fid),) = rows
+        return qv, limit, compiled[fid] if fid >= 0 else None, columns[0]
+
+    def _wire_shape(
+        self, hits: DataFrame, columns: list[str] | None
+    ) -> DataFrame:
+        """The single-request wire shape: id + requested columns +
+        similarity + rank (ties on the lower id)."""
+        cols = list(
+            self.columns or self.corpus.columns
+            if columns is None
+            else columns
+        )
+        rank_w = F.row_number().over(
+            Window.orderBy(F.desc("similarity"), F.asc(self.id_col))
+        ).cast("bigint")
+        out_cols = [self.id_col] if self.id_col not in cols else []
+        return hits.select(*out_cols, *cols, "similarity").withColumn(
+            "rank", rank_w
+        )
 
     def search_batch(
         self,
@@ -342,9 +392,9 @@ class SearchService:
         rank window (filter-then-rank, same evaluation order as
         :meth:`search`), and per-request limits cut the ranked stream.
         Returns (request_id, id, attribute columns, cluster, similarity,
-        rank). vs :func:`search_many`: that is the exact full-scan batch;
-        this reads only the probed fraction of the index — the scale
-        path once the corpus dwarfs the query batch."""
+        rank). It reads only the probed fraction of the index — the
+        scale path once the corpus dwarfs the query batch; at full probe
+        it equals sequential :meth:`search` calls."""
         import os
 
         from strava_vector_search_spark.operators.ann import (
@@ -373,7 +423,7 @@ class SearchService:
         # (batch workloads repeat a handful of filter shapes; a batch
         # of thousands of all-distinct filters is thousands of
         # independent queries, not a batch).
-        rows, compiled, any_unfiltered = self._parse_batch_requests(
+        rows, compiled, _columns = self._parse_requests(
             requests, k_default
         )
         queries_df = self.spark.createDataFrame(
@@ -387,7 +437,7 @@ class SearchService:
                 (F.col("_filter_id") == F.lit(j)) & c
                 for j, c in enumerate(compiled)
             ]
-            if any_unfiltered:
+            if any(r[3] < 0 for r in rows):
                 preds.insert(0, F.col("_filter_id") == F.lit(-1))
             pre = reduce(or_, preds)
         ranked = ivf_batch_topk_indexed(
@@ -446,103 +496,56 @@ class SearchService:
         )
         return self
 
+    def _attached_pq(self, lane: str) -> tuple:
+        """(books, codes, centroids, meta) of the attached artifact, once
+        the approximate lanes' preconditions hold."""
+        if self.pq_index is None:
+            raise RuntimeError(
+                f"no PQ index: call attach_pq_index() before {lane}()"
+            )
+        if self.embeddings is None:
+            raise RuntimeError(
+                "service not built: call build() or attach_embeddings()"
+            )
+        return self.pq_index
+
     def search_approx(
         self, request: dict | str, nprobe: int = 4, n_cand: int = 200
     ) -> DataFrame:
         """Serve one JSON request through the COMPRESSED index: metadata
         filters first (02:406 — the DSL predicate runs on the narrow
         corpus scan and semi-joins the code table, so filtered-out rows
-        never enter ADC and never consume candidate slots), probe the
-        loaded coarse centroids, ADC-scan the surviving probed codes,
-        exact-rescore ``n_cand`` candidates against the stored
-        embeddings, and return :meth:`search`'s wire shape (requested
-        columns + similarity + rank). The approximation is candidate
+        never enter ADC and never consume candidate slots), then
+        :func:`operators.pq.ivfpq_topk` over the loaded artifact (probe
+        the coarse centroids, ADC-scan the probed codes, exact-rescore
+        ``n_cand`` candidates against the stored embeddings), returned in
+        :meth:`search`'s wire shape. The approximation is candidate
         recall only — shared hits carry similarities identical to
         :meth:`search`'s (same scorer on the same stored vectors)."""
         from strava_vector_search_spark.operators import pq as PQ
-        from strava_vector_search_spark.operators.search import (
-            brute_force_topk,
-        )
 
-        if isinstance(request, str):
-            request = json.loads(request)
-        if self.pq_index is None:
-            raise RuntimeError(
-                "no PQ index: call attach_pq_index() before "
-                "search_approx()"
-            )
-        if self.embeddings is None:
-            raise RuntimeError(
-                "service not built: call build() or attach_embeddings()"
-            )
-        books, codes, cents, meta = self.pq_index
-        if "query_vec" in request:
-            qv = [float(x) for x in request["query_vec"]]
-        elif "query" in request:
-            qv = [
-                float(x)
-                for x in hash_embed_text(
-                    self.spark, request["query"], self.dim
-                )
-            ]
-        else:
-            raise FilterDSLError("request needs 'query' or 'query_vec'")
-        limit = int(request.get("limit", 10))
-        cols = list(
-            request.get("columns", self.columns or self.corpus.columns)
-        )
-        if request.get("filter"):
-            attrs = set(self.attributes) if self.attributes else None
-            pred = compile_filter(request["filter"], attrs)
+        books, codes, cents, meta = self._attached_pq("search_approx")
+        qv, limit, pred, columns = self._parse_one(request)
+        if pred is not None:
             keep_ids = self.corpus.filter(pred).select(self.id_col)
             # semi-join, planner-chosen strategy: the qualifying-id side
             # can be any size, so no forced broadcast
             codes = codes.join(keep_ids, self.id_col, "left_semi")
-        probed = PQ.probe_clusters(cents, qv, nprobe)
-        cand_codes = codes.join(
-            F.broadcast(probed),
-            codes[meta["cluster_col"]] == probed["cluster"],
-            "left_semi",
-        )
-        # residual-stamped artifact (IVFADC): ADC needs each probed
-        # cell's q·centroid offset — a bounded nprobe-row collect
-        centroid_vecs = None
-        if meta.get("residual"):
-            centroid_vecs = {
-                int(r["cluster"]): r["centroid"]
-                for r in cents.join(
-                    F.broadcast(probed), "cluster", "left_semi"
-                ).collect()
-            }
-        cand = PQ.pq_candidates(
-            cand_codes,
-            books,
-            qv,
-            n_cand=n_cand,
-            id_col=self.id_col,
-            centroid_vecs=centroid_vecs,
-            cluster_col=meta["cluster_col"],
-        )
-        pruned = self.embeddings.join(
-            F.broadcast(cand.select(self.id_col)),
-            self.id_col,
-            "left_semi",
-        )
-        top = brute_force_topk(
-            pruned,
-            qv,
+        top = PQ.ivfpq_topk(
+            emb=self.embeddings,
+            codes=codes,
+            books=books,
+            query_vec=qv,
             k=limit,
+            nprobe=nprobe,
+            n_cand=n_cand,
+            cluster_col=meta["cluster_col"],
             id_col=self.id_col,
+            centroids=cents,
+            residual=bool(meta.get("residual")),
             assume_normalized=self.assume_normalized,
         )
-        base = top.join(self.corpus, self.id_col)
-        rank_w = F.row_number().over(
-            Window.orderBy(F.desc("similarity"), F.asc(self.id_col))
-        ).cast("bigint")
-        out_cols = [self.id_col] if self.id_col not in cols else []
-        return base.select(
-            *out_cols, *cols, "similarity"
-        ).withColumn("rank", rank_w)
+        return self._wire_shape(top.join(self.corpus, self.id_col), columns)
 
     def search_approx_batch(
         self,
@@ -576,20 +579,14 @@ class SearchService:
             similarity,
         )
         from strava_vector_search_spark.operators import pq as PQ
+        from strava_vector_search_spark.operators.ann import (
+            rank_probed_clusters,
+        )
 
-        if self.pq_index is None:
-            raise RuntimeError(
-                "no PQ index: call attach_pq_index() before "
-                "search_approx_batch()"
-            )
-        if self.embeddings is None:
-            raise RuntimeError(
-                "service not built: call build() or attach_embeddings()"
-            )
+        books, codes, cents, meta = self._attached_pq("search_approx_batch")
         if not requests:
             raise ValueError("search_approx_batch: empty request list")
-        books, codes, cents, meta = self.pq_index
-        rows, compiled, _any_unfiltered = self._parse_batch_requests(
+        rows, compiled, _columns = self._parse_requests(
             requests, k_default
         )
         cand_parts = []
@@ -605,10 +602,6 @@ class SearchService:
                 [(i, qv) for i, qv, _l, _f in group],
                 "query_id bigint, query_vec array<double>",
             )
-            from strava_vector_search_spark.operators.ann import (
-                rank_probed_clusters,
-            )
-
             probed: dict[int, set] = {i: set() for i, *_ in group}
             for r in rank_probed_clusters(cents, gq, nprobe).collect():
                 probed[r["query_id"]].add(r["cluster"])
@@ -694,28 +687,10 @@ class SearchService:
         the flattened shape the reference builds with
         PARSE_JSON → ['results'] → FLATTEN (01:200-219).
         """
-        if isinstance(request, str):
-            request = json.loads(request)
         if self.embeddings is None:
             raise RuntimeError("service not built: call build() or attach_embeddings()")
-
-        if "query_vec" in request:
-            qv = [float(x) for x in request["query_vec"]]
-        elif "query" in request:
-            qv = [float(x) for x in hash_embed_text(self.spark, request["query"], self.dim)]
-        else:
-            raise FilterDSLError("request needs 'query' or 'query_vec'")
-
-        limit = int(request.get("limit", 10))
-        cols = list(request.get("columns", self.columns or self.corpus.columns))
-
-        pred = None
-        if request.get("filter"):
-            attrs = set(self.attributes) if self.attributes else None
-            pred = compile_filter(request["filter"], attrs)
-
-        emb = self.embeddings
-        base = self.corpus.join(emb, self.id_col)
+        qv, limit, pred, columns = self._parse_one(request)
+        base = self.corpus.join(self.embeddings, self.id_col)
         top = brute_force_topk(
             base,
             qv,
@@ -724,11 +699,7 @@ class SearchService:
             predicate=pred,
             assume_normalized=self.assume_normalized,
         )
-        rank_w = F.row_number().over(
-            Window.orderBy(F.desc("similarity"), F.asc(self.id_col))
-        ).cast("bigint")
-        out_cols = [self.id_col] if self.id_col not in cols else []
-        return top.select(*out_cols, *cols, "similarity").withColumn("rank", rank_w)
+        return self._wire_shape(top, columns)
 
 
 # ---------------------------------------------------------------------------
@@ -860,75 +831,3 @@ def cached_search(
     rows = svc.search(request).collect()
     cache.put(request, rows)
     return rows
-
-
-def search_many(
-    svc: SearchService, requests: list[dict], k_default: int = 10
-) -> DataFrame:
-    """Serve MANY requests in ONE Spark job — the reference's 'batch
-    multiple user queries together' (02:421) at the service layer.
-
-    All query vectors ship as one broadcast table against a single corpus
-    scan (operators.search.batch_topk); per-request filters are compiled
-    into the scored stream as (request_id AND predicate) disjunctions so
-    rows are only scored for the requests whose filters they pass. Returns
-    (request_id, id, similarity, rank) — join back for payload columns.
-    """
-    from strava_vector_search_spark.functions.embed import hash_embed_text
-    from strava_vector_search_spark.functions.vector import similarity as _similarity
-
-    if svc.embeddings is None:
-        raise RuntimeError("service not built: call build() or attach_embeddings()")
-
-    rows = []
-    max_k = k_default
-    for i, req in enumerate(requests):
-        if "query_vec" in req:
-            qv = [float(x) for x in req["query_vec"]]
-        else:
-            qv = [float(x) for x in hash_embed_text(svc.spark, req["query"], svc.dim)]
-        rows.append((i, qv))
-        max_k = max(max_k, int(req.get("limit", k_default)))
-    queries_df = svc.spark.createDataFrame(
-        rows, "request_id int, query_vec array<double>"
-    )
-
-    # per-request predicates compile into ONE disjunction applied BEFORE
-    # scoring/ranking (filter-then-rank, the reference's evaluation order —
-    # a filtered-out row must not consume a rank slot)
-    attrs = set(svc.attributes) if svc.attributes else None
-    pre = []
-    limits = []
-    for i, req in enumerate(requests):
-        c = F.col("request_id") == i
-        if req.get("filter"):
-            c = c & compile_filter(req["filter"], attrs)
-        pre.append(c)
-        limits.append(int(req.get("limit", k_default)))
-    keep = pre[0]
-    for c in pre[1:]:
-        keep = keep | c
-
-    base = svc.corpus.join(svc.embeddings, svc.id_col)
-    candidates = base.join(F.broadcast(queries_df), how="cross").filter(keep)
-    scored = candidates.withColumn(
-        "similarity",
-        _similarity(
-            F.col("embedding"), F.col("query_vec"), svc.assume_normalized
-        ),
-    )
-    w = Window.partitionBy("request_id").orderBy(
-        F.desc("similarity"), F.asc(svc.id_col)
-    )
-    ranked = scored.withColumn(
-        "rank", F.row_number().over(w).cast("bigint")
-    ).drop("query_vec", "embedding")
-
-    limit_conds = [
-        (F.col("request_id") == i) & (F.col("rank") <= lim)
-        for i, lim in enumerate(limits)
-    ]
-    lim_keep = limit_conds[0]
-    for c in limit_conds[1:]:
-        lim_keep = lim_keep | c
-    return ranked.filter(lim_keep)

@@ -149,50 +149,72 @@ def test_search_json_wire_shape(svc):
     assert hit["rank"] == 1 and isinstance(hit["similarity"], float)
 
 
-def test_search_many_single_job_batching(spark, svc):
-    from strava_vector_search_spark.service import search_many
-
-    requests = [
-        {"query": "interval run workout speed training", "limit": 2},
-        {
-            "query": "hard climbing",
-            "filter": {"@eq": {"sport_type": "ride"}},
-            "limit": 3,
-        },
-    ]
-    out = search_many(svc, requests)
-    by_req = {}
-    for r in out.collect():
-        by_req.setdefault(r["request_id"], []).append(r)
-    assert len(by_req[0]) == 2
-    # request 0's top hit is the exact text match
-    top0 = min(by_req[0], key=lambda r: r["rank"])
-    assert top0["doc_id"] == 1
-    # request 1's hits all satisfy its own filter
-    assert all(r["sport_type"] == "ride" for r in by_req[1])
-    assert len(by_req[1]) <= 3
+def test_bad_query_vec_dim_and_limit_rejected(svc):
+    """The scorer zips the query against each stored vector, so a
+    query_vec of the wrong width would rank on NULL similarities; the
+    request front end refuses it, and a limit below 1, naming the
+    request, the bad value and the service dim."""
+    with pytest.raises(
+        ValueError, match=r"request 0: query_vec has 5 values, the service dim is 32"
+    ):
+        svc.search({"query_vec": [1.0] * 5, "limit": 3})
+    for bad in (0, -1):
+        with pytest.raises(
+            ValueError, match=rf"request 0: limit {bad} must be >= 1 \(service dim 32\)"
+        ):
+            svc.search({"query_vec": [1.0] * 32, "limit": bad})
 
 
-def test_search_many_filter_before_rank(spark, svc):
-    # the filtered request must fill its limit from FILTERED docs even when
-    # unfiltered docs dominate the global ranking (filter-then-rank order)
-    from strava_vector_search_spark.service import search_many
+def test_search_approx_equals_search_at_full_probe(spark, docs, svc, tmp_path):
+    """With every cell probed and n_cand >= the corpus, the compressed
+    lane loses no candidate: search_approx returns exactly search's
+    (id, similarity, rank), filtered or not. Every candidate is rescored
+    exactly, so any codebook will do (no training); the IVF cells are
+    the sport_type values (no KMeans). The embeddings are collected once
+    so no request re-embeds the corpus."""
+    import numpy as np
 
-    out = search_many(
-        svc,
-        [
-            {
-                "query": "interval run workout speed training",
-                "filter": {"@eq": {"sport_type": "ride"}},
-                "limit": 3,
-            }
-        ],
-    ).collect()
-    # 3 ride docs exist; despite run docs scoring higher globally, all 3
-    # slots must be rides with ranks 1..3
-    assert len(out) == 3
-    assert all(r["sport_type"] == "ride" for r in out)
-    assert sorted(r["rank"] for r in out) == [1, 2, 3]
+    from strava_vector_search_spark.operators import pq as PQ
+
+    rows = svc.embeddings.join(docs.select("doc_id", "sport_type"), "doc_id").collect()
+    emb = spark.createDataFrame(rows, "doc_id int, embedding array<float>, sport_type string")
+    cells: dict[str, list] = {}
+    for r in rows:
+        cells.setdefault(r["sport_type"], []).append(r["embedding"])
+    cents = spark.createDataFrame(
+        [(c, np.mean(v, axis=0).tolist()) for c, v in cells.items()],
+        "cluster string, centroid array<double>",
+    )
+    books = np.random.default_rng(0).normal(size=(4, 4, 8))
+    codes = PQ.encode_pq(emb, books, id_col="doc_id", keep_cols=("sport_type",))
+    path = str(tmp_path / "pq")
+    PQ.write_pq_index(
+        codes, books, path, id_col="doc_id", cluster_col="sport_type", centroids=cents
+    )
+    approx = (
+        SearchService(
+            spark, docs, id_col="doc_id", search_col="text",
+            attributes=svc.attributes, dim=32,
+        )
+        .attach_embeddings(emb.drop("sport_type"), vec_id_col="doc_id")
+        .attach_pq_index(path)
+    )
+    vec = {r["doc_id"]: [float(x) for x in r["embedding"]] for r in rows}
+    for req in (
+        {"query_vec": vec[4], "limit": 4},
+        # run docs outrank every ride unfiltered
+        {"query_vec": vec[1], "filter": {"@eq": {"sport_type": "ride"}}, "limit": 3},
+    ):
+        got, want = (
+            [(r["doc_id"], r["similarity"], r["rank"])
+             for r in df.orderBy("rank").collect()]
+            for df in (approx.search_approx(req, nprobe=3, n_cand=6), approx.search(req))
+        )
+        assert got == want, req
+        assert len(got) == req["limit"]
+    # the batch lanes share the front end: the bad request is named
+    with pytest.raises(ValueError, match="request 1: query_vec has 31 values"):
+        approx.search_approx_batch([{"query": "ride"}, {"query_vec": [0.0] * 31}])
 
 
 class TestSearchBatchIVF:
@@ -231,6 +253,13 @@ class TestSearchBatchIVF:
             "filter": {"@eq": {"sport_type": "swim"}},
             "limit": 5,
         },
+        # run docs outrank every ride unfiltered: the filtered request
+        # must still fill its limit from rides (filter-then-rank)
+        {
+            "query": "interval run workout speed training",
+            "filter": {"@eq": {"sport_type": "ride"}},
+            "limit": 3,
+        },
     ]
 
     @staticmethod
@@ -246,6 +275,9 @@ class TestSearchBatchIVF:
             got = self._rows(batch.filter(F.col("request_id") == i))
             want = self._rows(ivf_svc.search(req))
             assert got == want, f"request {i}"
+        rides = batch.filter(F.col("request_id") == 3).collect()
+        assert sorted(r["rank"] for r in rides) == [1, 2, 3]
+        assert all(r["sport_type"] == "ride" for r in rides)
 
     def test_batch_invariance_under_pruning(self, ivf_svc):
         batch = ivf_svc.search_batch(self.REQUESTS, nprobe=1)
