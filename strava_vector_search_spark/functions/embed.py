@@ -11,7 +11,9 @@ Two embedders behind one contract (a ``Column -> Column`` of
   per-bucket sum → L2 normalize). No model download, bit-reproducible,
   entirely JVM-side: this is what tests and oracles use, and it doubles as a
   perfectly scalable "embedding" for pipeline plumbing at 100 TB (it is a
-  shuffle-on-doc-id aggregation, nothing more).
+  shuffle-on-doc-id aggregation, nothing more). Its driver-side twin
+  :func:`hash_embed_text_local` embeds request text bit-identically with
+  no Spark job (the md5 lane's twin is :func:`md5_embed_text_local`).
 * :func:`model_embedder` — an Arrow-batched Pandas-UDF wrapper around a real
   sentence-transformer model (gated behind an import-try; this container has
   no model libs, so tests use the deterministic fake). At scale this is the
@@ -21,6 +23,12 @@ Two embedders behind one contract (a ``Column -> Column`` of
 
 from __future__ import annotations
 
+import hashlib
+import math
+import re
+from decimal import ROUND_HALF_UP, Decimal
+
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -191,48 +199,167 @@ def md5_embedding_table(
     )
 
 
+def _bucket_sums(text: str, dim: int, hash_pair) -> dict[int, float]:
+    """Driver-side replay of the table kernels' explode → (bucket, weight)
+    → per-bucket sum for ONE string. ``hash_pair(token) -> (h, w)`` gives
+    the bucket hash (bucket = ``h % dim``, Python's ``%`` with a positive
+    modulus is Spark's ``pmod``) and the weight. Each bucket's sum is a
+    left fold in token order starting from its first weight — the order
+    Spark's partial aggregate sums one row's exploded tokens in."""
+    sums: dict[int, float] = {}
+    for tok in re.split(r"[^a-z0-9]+", text.lower()):
+        if tok:
+            h, w = hash_pair(tok)
+            b = h % dim
+            sums[b] = sums[b] + w if b in sums else w
+    return sums
+
+
+def _md5i(s: str) -> int:
+    return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
+
+
+def _md5_pair(tok: str) -> tuple[int, int]:
+    return _md5i(tok), _md5i("w" + tok) % 1000
+
+
 def md5_embed_text_local(text: str, dim: int = 768) -> list[float]:
     """Driver-side pure-Python twin of :func:`md5_embedding_table` for
     ONE query string — what a production client does with the query text
-    (embed at the client, ship the vector), saving the two-shuffle 1-row
-    Spark pipeline (~1 s of fixed latency per search at 32 shuffle
-    partitions). Bit-identical to the table kernel on the same text:
-    same tokenizer (lower → split on non-[a-z0-9]), same 60-bit md5
-    bucket/weight idiom, and every bucket sum is an exact integer ≤ ~1e5
-    so the float round trip loses nothing (parity pinned in
-    tests/test_embed.py against the table kernel)."""
-    import hashlib
-    import re
-
-    def md5i(s: str) -> int:
-        return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
-
+    (embed at the client, ship the vector) instead of running the
+    two-shuffle 1-row Spark pipeline. Bit-identical to the table kernel
+    on the same text: same tokenizer (lower → split on non-[a-z0-9]),
+    same 60-bit md5 bucket/weight idiom, and every bucket sum is an exact
+    integer ≤ ~1e5 so the float round trip loses nothing (parity pinned
+    in tests/test_embed.py against the table kernel)."""
     vec = [0.0] * dim
-    for tok in re.split(r"[^a-z0-9]+", text.lower()):
-        if tok:
-            vec[md5i(tok) % dim] += md5i("w" + tok) % 1000
+    for b, v in _bucket_sums(text, dim, _md5_pair).items():
+        vec[b] = float(v)
+    return vec
+
+
+_P1, _P2, _P3 = 0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9
+_P4, _P5 = 0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5
+_M64 = (1 << 64) - 1
+
+
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _xxh_round(acc: int, lane: int) -> int:
+    return (_rotl((acc + lane * _P2) & _M64, 31) * _P1) & _M64
+
+
+def _xxh64(data: bytes) -> int:
+    """XXH64 of ``data`` as a SIGNED 64-bit int — Spark's ``xxhash64``
+    (seed 42) on a string's UTF-8 bytes."""
+    seed, n, i = 42, len(data), 0
+    if n >= 32:
+        v = [
+            (seed + _P1 + _P2) & _M64,
+            (seed + _P2) & _M64,
+            seed,
+            (seed - _P1) & _M64,
+        ]
+        while i + 32 <= n:
+            for j in range(4):
+                lane = int.from_bytes(data[i + 8 * j : i + 8 * j + 8], "little")
+                v[j] = _xxh_round(v[j], lane)
+            i += 32
+        h = (
+            _rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12) + _rotl(v[3], 18)
+        ) & _M64
+        for x in v:
+            h = ((h ^ _xxh_round(0, x)) * _P1 + _P4) & _M64
+    else:
+        h = (seed + _P5) & _M64
+    h = (h + n) & _M64
+    while i + 8 <= n:
+        lane = int.from_bytes(data[i : i + 8], "little")
+        h = (_rotl(h ^ _xxh_round(0, lane), 27) * _P1 + _P4) & _M64
+        i += 8
+    if i + 4 <= n:
+        lane = int.from_bytes(data[i : i + 4], "little")
+        h = (_rotl(h ^ ((lane * _P1) & _M64), 23) * _P2 + _P3) & _M64
+        i += 4
+    while i < n:
+        h = (_rotl(h ^ ((data[i] * _P5) & _M64), 11) * _P1) & _M64
+        i += 1
+    h = ((h ^ (h >> 33)) * _P2) & _M64
+    h = ((h ^ (h >> 29)) * _P3) & _M64
+    h ^= h >> 32
+    return h - (1 << 64) if h >> 63 else h
+
+
+def _xxh_pair(tok: str) -> tuple[int, float]:
+    # `>>` on a negative int is arithmetic, like Spark's shiftright
+    h = _xxh64(tok.encode())
+    return h, float((h >> 8) % 1000) / 1000.0
+
+
+_SIX_DP = Decimal("0.000001")
+
+
+def _round6(x: float) -> float:
+    """Spark's ``round(x, 6)`` on a double: HALF_UP on the double's
+    decimal string (Python's ``round`` is half-even on the binary value
+    and diverges on ties)."""
+    return float(Decimal(repr(x)).quantize(_SIX_DP, ROUND_HALF_UP))
+
+
+def hash_embed_text_local(
+    text: str, dim: int = DEFAULT_DIM
+) -> list[float] | None:
+    """Driver-side pure-Python twin of :func:`hash_embedding_table` for
+    ONE string: bit-identical to the row the kernel would produce for it
+    (parity pinned in tests/test_embed.py over a corpus and edge
+    strings), with no Spark job. Same steps as the kernel: bucket sums
+    rounded to 6 dp; the norm is the left fold of squares in ascending
+    bucket order (zero buckets add exactly nothing, so they are
+    skipped); each element is ``round(x / norm, 6)`` cast to float32,
+    as collecting the ``array<float>`` column returns it. Returns None
+    where the kernel drops the row: no tokens, or every token weight 0."""
+    sums = {
+        b: _round6(v) for b, v in _bucket_sums(text, dim, _xxh_pair).items()
+    }
+    n2 = 0.0
+    for b in sorted(sums):
+        n2 += sums[b] * sums[b]
+    if n2 == 0.0:
+        return None
+    norm = math.sqrt(n2)
+    vec = [0.0] * dim
+    for b, v in sums.items():
+        vec[b] = float(np.float32(_round6(v / norm)))
     return vec
 
 
 def hash_embed_text(spark, text: str, dim: int = DEFAULT_DIM) -> list[float]:
-    """Embed one query string driver-side with the same hash embedder.
+    """Embed one query string with the corpus's hash embedder.
 
-    The reference embeds the query text inside a 1-row CTE (``02:206-208``);
-    we do the same through a 1-row DataFrame so query- and corpus-embeddings
-    share one code path, then collect the single vector.
+    The reference embeds the query text inside a 1-row CTE (``02:206-208``)
+    with the same model as the corpus. Here the client embeds it
+    (:func:`hash_embed_text_local`, bit-identical to
+    :func:`hash_embedding_table`) and ships the vector: one string is
+    sub-millisecond in Python, where a 1-row Spark pipeline costs four
+    jobs, most of a lookup's latency. ``spark`` is unused; it stays for
+    callers that pass it.
     """
-    one = spark.createDataFrame([(0, text)], "id int, t string")
-    rows = hash_embedding_table(one, "id", "t", dim).collect()
-    if not rows:
-        # hash_embedding_table drops zero-norm rows at the sparse aggregate
-        # (no [a-z0-9] tokens, or every token weight hashed to 0), so the
-        # 1-row query frame can come back empty. Fail with intent instead of
-        # an IndexError — mirrors _md5_query_vec_768's guard on the 768 lane.
+    if not isinstance(text, str):
+        raise ValueError(
+            f"query text must be a str, got {type(text).__name__}"
+        )
+    vec = hash_embed_text_local(text, dim)
+    if vec is None:
+        # the kernel drops zero-norm rows (no [a-z0-9] tokens, or every
+        # token weight hashed to 0): fail with intent — mirrors
+        # _md5_query_vec_768's guard on the 768 lane.
         raise ValueError(
             "query text embeds to an empty/zero vector (no [a-z0-9] tokens "
             "or all token weights are 0); cannot rank by cosine similarity"
         )
-    return rows[0]["embedding"]
+    return vec
 
 
 def model_embedder(

@@ -14,9 +14,10 @@ filterable ATTRIBUTES + freshness lag) and queries it with a JSON request
 * :class:`SearchService` — ``build()`` materializes the index (select the
   declared columns, embed the search column, write a narrow embeddings
   parquet partitioned for pruning). Every lane reads its requests through
-  ONE front end (:meth:`SearchService._parse_requests`: JSON load, query
-  embedding in one job per call, limit, one compiled predicate per
-  distinct filter body, dimension/limit checks) and serves them four ways:
+  ONE front end (:meth:`SearchService._parse_requests`: JSON load,
+  driver-side query embedding with no Spark job, limit, one compiled
+  predicate per distinct filter body, query/dimension/limit checks) and
+  serves them four ways:
 
   ========================  =================================================
   ``search``                single request, exact: filter → cosine → top-k
@@ -45,6 +46,7 @@ from pyspark.sql import functions as F
 
 from strava_vector_search_spark.functions.embed import (
     DEFAULT_DIM,
+    hash_embed_text_local,
     hash_embedding_table,
 )
 from strava_vector_search_spark.operators.ann import default_ivf_cells
@@ -280,15 +282,17 @@ class SearchService:
         growth is bounded by distinct filters, not batch size; filter_id
         -1 marks unfiltered requests), and columns is each request's
         requested projection (None = the service default). Text queries
-        embed in ONE table job, not one 1-row collect per request (a
-        10^4-request batch would otherwise run 10^4 driver-side Spark
-        jobs before the scan even starts). A ``query_vec`` whose length
-        is not the service dim, or a limit below 1, is refused here:
-        scoring zips the query against the stored vectors, so a short
-        vector would otherwise rank on NULL similarities."""
+        embed on the driver through ``hash_embed_text_local``,
+        bit-identical to the corpus's ``hash_embedding_table``, so the
+        front end runs no Spark job (well under 1 ms per text, where one
+        table job costs more than a 1,000-text batch). A ``query`` that is not
+        a string, a ``query_vec`` whose length is not the service dim,
+        or a limit below 1, is refused here: scoring zips the query
+        against the stored vectors, so a short vector would otherwise
+        rank on NULL similarities."""
         attrs = set(self.attributes) if self.attributes else None
         parsed: list[tuple[list[float] | None, int, dict]] = []
-        texts: list[tuple[int, str]] = []
+        missing: list[int] = []
         for i, req in enumerate(requests):
             if isinstance(req, str):
                 req = json.loads(req)
@@ -300,8 +304,15 @@ class SearchService:
                         f"the service dim is {self.dim}"
                     )
             elif "query" in req:
-                qv = None
-                texts.append((i, req["query"]))
+                text = req["query"]
+                if not isinstance(text, str):
+                    raise ValueError(
+                        f"request {i}: query must be a str, got "
+                        f"{type(text).__name__}"
+                    )
+                qv = hash_embed_text_local(text, self.dim)
+                if qv is None:
+                    missing.append(i)
             else:
                 raise FilterDSLError(
                     "request needs 'query' or 'query_vec'"
@@ -313,30 +324,16 @@ class SearchService:
                     f"dim {self.dim})"
                 )
             parsed.append((qv, limit, req))
-        embedded: dict[int, list[float]] = {}
-        if texts:
-            tdf = self.spark.createDataFrame(
-                texts, "request_id int, t string"
+        if missing:
+            raise ValueError(
+                f"requests {missing} embed to empty/zero vectors "
+                "(no [a-z0-9] tokens or all token weights are 0); "
+                "cannot rank by cosine similarity"
             )
-            embedded = {
-                r["request_id"]: [float(x) for x in r["embedding"]]
-                for r in hash_embedding_table(
-                    tdf, "request_id", "t", self.dim
-                ).collect()
-            }
-            missing = sorted(i for i, _ in texts if i not in embedded)
-            if missing:
-                raise ValueError(
-                    f"requests {missing} embed to empty/zero vectors "
-                    "(no [a-z0-9] tokens or all token weights are 0); "
-                    "cannot rank by cosine similarity"
-                )
         rows = []
         filter_ids: dict[str, int] = {}
         compiled: list[Column] = []
         for i, (qv, limit, req) in enumerate(parsed):
-            if qv is None:
-                qv = embedded[i]
             flt = req.get("filter")
             if flt:
                 key = json.dumps(flt, sort_keys=True)

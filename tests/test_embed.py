@@ -43,10 +43,74 @@ def test_embedding_unit_norm(spark, docs):
         assert r["n2"] == pytest.approx(1.0, abs=1e-4)
 
 
+# texts the driver-side twin must embed exactly as the table kernel does,
+# or drop exactly where it drops: empty / punctuation-only, non-ASCII
+# and mixed case (incl. non-ASCII capitals that lowercase to ASCII),
+# single tokens of 1, 4, 8, 31, 32, 33 and 70 bytes (every XXH64 branch:
+# byte tail, 4-byte tail, 8-byte lanes, 32-byte stripes) and tokens of
+# weight 0 ("d3", "q7", "8o" hash to (h >> 8) % 1000 == 0)
+EDGE_TEXTS = [
+    "",
+    "  ... --- !!! ",
+    "Grüße aus München — naïve café crème",
+    "İstanbul KELVIN run; Run, RUN!",
+    "a",
+    "abcd",
+    "abcdefgh",
+    "x" * 31,
+    "y" * 32,
+    "z" * 33,
+    "0123456789abcdefghij" * 3 + "klmnopqrst",
+    "a abcd abcdefgh " + "q" * 31 + " " + "r" * 33 + " a a a",
+    "d3",
+    "D3 q7, 8o!",
+    "d3 run",
+]
+# the ones the kernel drops (no tokens, or every token weight 0)
+DROPPED_TEXTS = {"", "  ... --- !!! ", "d3", "D3 q7, 8o!"}
+
+
 def test_query_embedding_matches_corpus_path(spark, docs):
+    """The driver-side query embedder (hash_embed_text_local, behind
+    hash_embed_text and the service front end) equals the distributed
+    kernel element for element, compared as float32, on every document
+    of the sf0.001 corpus (a small vocabulary: heavy bucket collisions)
+    plus the edge texts, at dims 768 and 64; texts the kernel drops
+    embed to None and make hash_embed_text raise."""
+    import numpy as np
+
+    from strava_vector_search_spark.functions.embed import (
+        hash_embed_text_local,
+    )
+    from strava_vector_search_spark.io.tables import load_table
+
+    corpus = load_table(spark, "/root/testdata/sf0.001", "documents")
+    texts = dict(corpus.select("doc_id", "text").collect())
+    assert len(texts) == 500
+    base = 1 + max(texts)
+    texts.update({base + i: t for i, t in enumerate(EDGE_TEXTS)})
+    texts.update({r["id"] + 2 * base: r["text"] for r in docs.collect()})
+    df = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
+    for dim in (768, 64):
+        expected = {
+            r["doc_id"]: np.array(r["embedding"], dtype=np.float32)
+            for r in hash_embedding_table(df, "doc_id", "text", dim).collect()
+        }
+        actual = {
+            i: hash_embed_text_local(t, dim) for i, t in texts.items()
+        }
+        kept = {i for i, v in actual.items() if v is not None}
+        assert kept == set(expected)
+        assert {texts[i] for i in texts.keys() - kept} == DROPPED_TEXTS
+        for i, want in expected.items():
+            got = np.array(actual[i], dtype=np.float32)
+            assert np.array_equal(got, want), (dim, texts[i])
+    for t in DROPPED_TEXTS:
+        with pytest.raises(ValueError, match="empty/zero vector"):
+            hash_embed_text(spark, t, 64)
     qv = hash_embed_text(spark, "easy recovery jog gentle pace", dim=16)
-    corpus = {r["id"]: list(r["embedding"]) for r in hash_embedding_table(docs, "id", "text", dim=16).collect()}
-    assert [float(x) for x in qv] == [float(x) for x in corpus[2]]
+    assert qv == hash_embed_text_local("easy recovery jog gentle pace", 16)
+    assert all(type(x) is float for x in qv)
 
 
 def test_tokenization_case_and_punct_insensitive(spark):

@@ -165,6 +165,59 @@ def test_bad_query_vec_dim_and_limit_rejected(svc):
             svc.search({"query_vec": [1.0] * 32, "limit": bad})
 
 
+def test_non_string_query_rejected(spark, svc):
+    """A ``query`` that is not a string is refused by the front end and
+    the client embedder, naming the request index and the value's type
+    (a Spark string column would coerce ``["run"]`` or ``123`` into text
+    and rank it)."""
+    from strava_vector_search_spark.functions.embed import hash_embed_text
+
+    for bad, tname in ((["run"], "list"), (123, "int"), (None, "NoneType")):
+        with pytest.raises(
+            ValueError, match=rf"request 0: query must be a str, got {tname}"
+        ):
+            svc.search({"query": bad, "limit": 2})
+        with pytest.raises(
+            ValueError, match=rf"query text must be a str, got {tname}"
+        ):
+            hash_embed_text(spark, bad, 32)
+    with pytest.raises(ValueError, match=r"request 1: query must be a str"):
+        svc._parse_requests([{"query": "run"}, {"query": 7}])
+
+
+def test_text_front_end_runs_no_spark_job(spark, svc):
+    """Request text embeds on the driver: neither the client embedder
+    nor the service front end may start a Spark job (a 1-row
+    hash_embedding_table pipeline costs 4 jobs, most of a lookup's
+    latency). The same job group does record a job when one runs, so an
+    empty list is not a tracking artefact."""
+    from strava_vector_search_spark.functions.embed import (
+        hash_embed_text,
+        hash_embedding_table,
+    )
+
+    sc = spark.sparkContext
+    group = "test_text_front_end_runs_no_spark_job"
+    sc.setJobGroup(group, "zero-job request front end")
+    try:
+        hash_embed_text(spark, "interval run workout", 32)
+        rows, _compiled, _columns = svc._parse_requests(
+            [
+                {"query": "easy recovery jog", "limit": 2},
+                {"query": "hill repeats", "filter": {"@eq": {"sport_type": "ride"}}},
+                {"query": "swimming drills", "limit": 1},
+            ]
+        )
+        assert len(rows) == 3
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        one = spark.createDataFrame([(0, "run")], "id int, t string")
+        hash_embedding_table(one, "id", "t", 32).collect()
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) != []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
 def test_search_approx_equals_search_at_full_probe(spark, docs, svc, tmp_path):
     """With every cell probed and n_cand >= the corpus, the compressed
     lane loses no candidate: search_approx returns exactly search's
