@@ -26,11 +26,12 @@ from __future__ import annotations
 import hashlib
 import math
 import re
-from decimal import ROUND_HALF_UP, Decimal
 
 import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from strava_vector_search_spark.functions.vector import _round6
 
 DEFAULT_DIM = 64  # testdata dimensionality; production reference uses 768 (02:88)
 
@@ -296,16 +297,6 @@ def _xxh_pair(tok: str) -> tuple[int, float]:
     # `>>` on a negative int is arithmetic, like Spark's shiftright
     h = _xxh64(tok.encode())
     return h, float((h >> 8) % 1000) / 1000.0
-
-
-_SIX_DP = Decimal("0.000001")
-
-
-def _round6(x: float) -> float:
-    """Spark's ``round(x, 6)`` on a double: HALF_UP on the double's
-    decimal string (Python's ``round`` is half-even on the binary value
-    and diverges on ties)."""
-    return float(Decimal(repr(x)).quantize(_SIX_DP, ROUND_HALF_UP))
 
 
 def hash_embed_text_local(

@@ -21,7 +21,9 @@ table so the scan moves ``4*D`` bytes/row and nothing else.
 from __future__ import annotations
 
 import math
+from decimal import ROUND_HALF_UP, Decimal
 
+import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -119,6 +121,85 @@ def cosine_similarity(a: Column, b: Column) -> Column:
 def cosine_similarity_rounded(a: Column, b: Column, scale: int = 6) -> Column:
     """Cosine rounded for deterministic cross-engine comparison (oracle parity)."""
     return F.round(cosine_similarity(a, b), scale)
+
+
+_SIX_DP = Decimal("0.000001")
+
+
+def _round6(x: float) -> float:
+    """Spark's ``round(x, 6)`` on a double: HALF_UP on the double's
+    decimal string (Python's ``round`` is half-even on the binary value
+    and diverges on ties)."""
+    return float(Decimal(repr(x)).quantize(_SIX_DP, ROUND_HALF_UP))
+
+
+def _round6_array(x: np.ndarray) -> np.ndarray:
+    """:func:`_round6` over an array of values of magnitude below 1e3.
+    ``np.round`` picks the same 6-dp neighbour unless ``x * 1e6`` lies
+    within rounding error of a half-way point, where it rounds half-even
+    on the binary product; those entries (and any of magnitude 1e3 or
+    more) go through :func:`_round6` itself."""
+    y = x * 1e6
+    out = np.round(x, 6)
+    exact = (np.abs(y - np.floor(y) - 0.5) < 1e-6) | ~(np.abs(x) < 1e3)
+    for i in np.flatnonzero(exact):
+        out.flat[i] = _round6(float(x.flat[i]))
+    return out
+
+
+# float64 values one block of cosine_similarity_local holds (32 MiB)
+_BLOCK_ELEMS = 1 << 22
+
+
+def _fold_sum(p: np.ndarray) -> np.ndarray:
+    """Left fold over the last axis from 0.0, as Spark's ``aggregate``
+    runs it (``np.sum`` adds pairwise and rounds differently). The
+    trailing ``+ 0.0`` turns an all-negative-zero fold into the +0.0
+    that folding from 0.0 yields."""
+    return np.cumsum(p, axis=-1)[..., -1] + 0.0
+
+
+def l2_norm_local(m: np.ndarray) -> np.ndarray:
+    """Row norms of a (n, d) float64 matrix, bit-identical to
+    :func:`l2_norm` on each row."""
+    return np.sqrt(_fold_sum(m * m))
+
+
+def cosine_similarity_local(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Driver-side twin of :func:`cosine_similarity` for every (row of
+    ``a``, row of ``b``) pair: an (n, m) float64 matrix equal bit for
+    bit to what the column expression returns for the same float64
+    vectors. Same steps: products and squared norms are left folds,
+    each norm is a ``sqrt`` and the cosine is ``dot / (|a| * |b|)``.
+    Products are formed in blocks of at most ``_BLOCK_ELEMS`` values. A
+    zero norm raises, as the column expression's division does under
+    ANSI."""
+    a = np.asarray(a, dtype=np.float64)
+    b = np.asarray(b, dtype=np.float64)
+    na, nb = l2_norm_local(a), l2_norm_local(b)
+    for name, n in (("a", na), ("b", nb)):
+        if (n == 0).any():
+            raise ValueError(
+                f"cosine_similarity_local: row "
+                f"{int(np.flatnonzero(n == 0)[0])} of {name} has norm 0"
+            )
+    d = max(a.shape[1], 1)
+    rb = max(1, min(len(b), _BLOCK_ELEMS // d))
+    ra = max(1, _BLOCK_ELEMS // (rb * d))
+    out = np.empty((len(a), len(b)))
+    for i in range(0, len(a), ra):
+        for j in range(0, len(b), rb):
+            dot = _fold_sum(a[i : i + ra, None, :] * b[None, j : j + rb, :])
+            out[i : i + ra, j : j + rb] = dot / (
+                na[i : i + ra, None] * nb[None, j : j + rb]
+            )
+    return out
+
+
+def cosine_similarity_rounded_local(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Driver-side twin of :func:`cosine_similarity_rounded`:
+    :func:`cosine_similarity_local` rounded HALF_UP to 6 dp."""
+    return _round6_array(cosine_similarity_local(a, b))
 
 
 def similarity(

@@ -25,11 +25,17 @@ testdata's ``label`` column; KMeans builds get pytest-only checks).
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from strava_vector_search_spark.functions.vector import (
+    _BLOCK_ELEMS,
     cosine_similarity_rounded,
+    cosine_similarity_rounded_local,
+    l2_norm_local,
     lit_double_array,
 )
 from strava_vector_search_spark.operators.search import brute_force_topk
@@ -133,6 +139,102 @@ def rank_probed_clusters(
     )
 
 
+class LocalCentroids(NamedTuple):
+    """A coarse centroid table held on the driver: cluster ids in
+    ascending order and their centroids as the rows of one (cells, dim)
+    float64 matrix."""
+
+    clusters: list
+    vectors: np.ndarray
+
+
+def _local_centroids(clusters: list, vectors: np.ndarray) -> LocalCentroids:
+    """Sort by cluster id and refuse what the distributed probe could not
+    rank: repeated ids, and non-finite or all-zero centroids (the
+    zero one divides by zero, which fails the query under ANSI)."""
+    from collections import Counter
+
+    dup = sorted(c for c, n in Counter(clusters).items() if n > 1)
+    if dup:
+        raise ValueError(f"centroid table repeats clusters {dup}")
+    if not clusters:
+        return LocalCentroids([], np.empty((0, 0)))
+    order = sorted(range(len(clusters)), key=clusters.__getitem__)
+    clusters = [clusters[i] for i in order]
+    vectors = np.asarray(vectors, dtype=np.float64)[order]
+    bad = ~np.isfinite(vectors).all(axis=1) | (l2_norm_local(vectors) == 0)
+    if bad.any():
+        raise ValueError(
+            f"centroid of cluster {clusters[int(np.flatnonzero(bad)[0])]!r} "
+            "is non-finite or has norm 0: no query can be probed against it"
+        )
+    return LocalCentroids(clusters, vectors)
+
+
+def collect_centroids(centroids: DataFrame) -> LocalCentroids:
+    """A (cluster, centroid) DataFrame collected to the driver (one job)."""
+    rows = centroids.select("cluster", "centroid").collect()
+    return _local_centroids(
+        [r["cluster"] for r in rows], [list(r["centroid"]) for r in rows]
+    )
+
+
+def read_centroids_local(path: str) -> LocalCentroids:
+    """Load a (cluster, centroid) parquet directory straight into driver
+    memory with pyarrow: no Spark job, not even a schema-inference one.
+    The table has one row per cell, so it is read whole at every call
+    (a layout rebuilt under the same path is picked up)."""
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(path, columns=["cluster", "centroid"])
+    col = t.column("centroid").combine_chunks()
+    widths = set(col.value_lengths().to_pylist())
+    flat = col.flatten()
+    if col.null_count or flat.null_count or len(widths) > 1:
+        raise ValueError(
+            f"centroid table {path!r} has null centroids or elements, or "
+            f"mixed widths {sorted(w for w in widths if w is not None)}"
+        )
+    return _local_centroids(
+        t.column("cluster").to_pylist(),
+        flat.to_numpy(zero_copy_only=False).reshape(len(t), max(widths, default=0)),
+    )
+
+
+def probe_local(
+    centroids: LocalCentroids, query_vecs: list, nprobe: int
+) -> list[list]:
+    """Each query's ``nprobe`` probed clusters, nearest first: the rule of
+    :func:`rank_probed_clusters` (rounded centroid cosine descending,
+    ties to the lower cluster id) run on the driver with no Spark job.
+    The cosine is :func:`cosine_similarity_rounded_local`, bit-identical
+    to the distributed one, and the stable sort over the id-ordered
+    cells keeps tied cells in ascending id order. Queries are ranked in
+    chunks that keep the (queries x cells) score block bounded."""
+    cells = centroids.clusters
+    if not cells or nprobe < 1 or not len(query_vecs):
+        return [[] for _ in query_vecs]
+    q = np.asarray(query_vecs, dtype=np.float64).reshape(len(query_vecs), -1)
+    if q.shape[1] != centroids.vectors.shape[1]:
+        raise ValueError(
+            f"query vectors have {q.shape[1]} values, the centroids "
+            f"{centroids.vectors.shape[1]}"
+        )
+    bad = ~np.isfinite(q).all(axis=1) | (l2_norm_local(q) == 0)
+    if bad.any():
+        raise ValueError(
+            f"query {int(np.flatnonzero(bad)[0])} is non-finite or has "
+            "norm 0: it has no cosine to any centroid"
+        )
+    step = max(1, _BLOCK_ELEMS // len(cells))
+    out: list[list] = []
+    for i in range(0, len(q), step):
+        cd = cosine_similarity_rounded_local(q[i : i + step], centroids.vectors)
+        for row in np.argsort(-cd, axis=1, kind="stable")[:, :nprobe]:
+            out.append([cells[j] for j in row])
+    return out
+
+
 def ivf_batch_topk(
     emb: DataFrame,
     queries: DataFrame,
@@ -169,13 +271,33 @@ def ivf_batch_topk(
     batch-DSL hook. It does not change what is SCANNED (cluster pruning
     does that); it changes what is ranked.
     """
-    from pyspark.sql import Window
-
     if centroids is None:
         centroids = compute_centroids(emb, cluster_col, vector_col)
     probed = rank_probed_clusters(
         centroids, queries, nprobe, query_id_col, query_vec_col
     ).select(F.col(query_id_col), F.col("cluster").alias("_ivf_pc"))
+    return _topk_in_probed(
+        emb, queries, probed, k, cluster_col, vector_col, id_col,
+        query_id_col, query_vec_col, pre_rank_filter,
+    )
+
+
+def _topk_in_probed(
+    emb: DataFrame,
+    queries: DataFrame,
+    probed: DataFrame,
+    k: int,
+    cluster_col: str,
+    vector_col: str,
+    id_col: str,
+    query_id_col: str,
+    query_vec_col: str,
+    pre_rank_filter: Column | None,
+) -> DataFrame:
+    """The scoring half of :func:`ivf_batch_topk`: ``probed`` holds the
+    (query id, ``_ivf_pc``) pairs of each query's probed clusters."""
+    from pyspark.sql import Window
+
     cand = (
         # null-vector filter FIRST, matching brute_force_topk (the
         # single-query path): without it, a probed cluster with fewer
@@ -280,55 +402,64 @@ def assert_ivf_layout(path: str, expected: str, op: str) -> None:
 def ivf_batch_topk_indexed(
     spark,
     index_path: str,
-    queries: DataFrame,
+    queries: list[tuple],
     k: int = 10,
     nprobe: int = 2,
     cluster_col: str = "label",
     vector_col: str = "embedding",
     id_col: str = "vec_id",
-    centroids: DataFrame | None = None,
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
+    centroids: LocalCentroids | None = None,
+    query_schema: str = "query_id bigint, query_vec array<double>",
     pre_rank_filter: Column | None = None,
 ) -> DataFrame:
     """:func:`ivf_batch_topk` against the MATERIALIZED index layout
-    (:func:`write_ivf_index`'s cluster-partitioned parquet): the union of
-    all queries' probed clusters is collected (a bounded
-    |queries| x nprobe driver list — the centroid-table class) and pushed
-    as a LITERAL ``IN`` filter, so it lands in the scan as
-    PartitionFilters and the unprobed clusters are never READ, not
-    merely filtered. Per-query cluster assignment then rides the same
-    broadcast join + WindowGroupLimit as the in-memory batch path —
-    results are identical (pinned in test_ann). Centroids default to the
-    table persisted by :func:`write_ivf_centroids`."""
+    (:func:`write_ivf_index`'s cluster-partitioned parquet). ``queries``
+    are driver rows typed by ``query_schema``, whose first two fields
+    are the query id and the query vector; any further fields pass
+    through to the result. Each query is probed on the driver with
+    :func:`probe_local` (the :func:`rank_probed_clusters` rule, no Spark
+    job); the union of the probed clusters is pushed as a LITERAL ``IN``
+    filter, so it lands in the scan as PartitionFilters and the
+    unprobed clusters are never READ, not merely filtered. The
+    per-query (query id, cluster) pairs travel as a small local table
+    into the same broadcast join + WindowGroupLimit as the in-memory
+    batch path — results are identical (pinned in test_ann). Centroids
+    default to the table persisted by :func:`write_ivf_centroids`, read
+    at call time by :func:`read_centroids_local`. Reading the layout's
+    schema is the only job run before the result is collected."""
+    from pyspark.sql.types import StructField, StructType
+
     part = spark.read.parquet(index_path)
     cents = (
         centroids
         if centroids is not None
-        else read_ivf_centroids(spark, index_path)
+        else read_centroids_local(index_path.rstrip("/") + "_centroids")
     )
-    union = sorted(
-        r["cluster"]
-        for r in rank_probed_clusters(
-            cents, queries, nprobe, query_id_col, query_vec_col
-        )
-        .select("cluster")
-        .distinct()
-        .collect()
+    qdf = spark.createDataFrame(queries, query_schema)
+    query_id_col, query_vec_col = qdf.columns[:2]
+    probes = probe_local(cents, [q[1] for q in queries], nprobe)
+    pairs = [(q[0], c) for q, cs in zip(queries, probes) for c in cs]
+    probed = spark.createDataFrame(
+        pairs,
+        StructType(
+            [
+                qdf.schema[0],
+                StructField("_ivf_pc", part.schema[cluster_col].dataType),
+            ]
+        ),
     )
-    pruned = part.filter(F.col(cluster_col).isin(union))
-    return ivf_batch_topk(
-        pruned,
-        queries,
-        k=k,
-        nprobe=nprobe,
-        cluster_col=cluster_col,
-        vector_col=vector_col,
-        id_col=id_col,
-        centroids=cents,
-        query_id_col=query_id_col,
-        query_vec_col=query_vec_col,
-        pre_rank_filter=pre_rank_filter,
+    union = sorted({c for _q, c in pairs})
+    return _topk_in_probed(
+        part.filter(F.col(cluster_col).isin(union)),
+        qdf,
+        probed,
+        k,
+        cluster_col,
+        vector_col,
+        id_col,
+        query_id_col,
+        query_vec_col,
+        pre_rank_filter,
     )
 
 

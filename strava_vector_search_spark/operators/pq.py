@@ -684,7 +684,12 @@ def pq_candidates_batch(
     (Q × cells) matrix of q·centroid constants via the same fancy index
     as the probe mask — the batched form of the IVFADC offset (see
     :func:`_cell_offsets_scalar`). A union cluster with no centroid
-    fails at matrix build, before any executor work."""
+    fails at matrix build, before any executor work.
+
+    The kernel runs at the width ``codes`` arrives with: spread the code
+    scan (``operators/util.rebalance_for_kernel``) before filtering it.
+    Checking the width here, after a semi-join, would run the join's
+    broadcast once for the check and again for the result."""
     import pandas as pd
 
     from pyspark.sql import Window
@@ -772,11 +777,7 @@ def pq_candidates_batch(
             if outs:
                 yield pd.concat(outs, ignore_index=True)
 
-    from strava_vector_search_spark.operators.util import (
-        rebalance_for_kernel,
-    )
-
-    local = rebalance_for_kernel(codes).mapInPandas(
+    local = codes.mapInPandas(
         _scan, f"query_id bigint, {id_col} {id_type}, adc_score double"
     )
     w = Window.partitionBy("query_id").orderBy(

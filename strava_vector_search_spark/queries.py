@@ -13499,17 +13499,19 @@ QUERIES.update({"svc_search_approx_768": svc_search_approx_768})
 def ann_ivf_batch_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The BATCHED probe against the materialized IVF layout
     (operators/ann.ivf_batch_topk_indexed): two query vectors ride ONE
-    pruned scan of the cluster-partitioned index — the union of their
-    probed clusters is a bounded driver list pushed as a literal IN, so
-    it lands as PartitionFilters (unprobed clusters never READ; pinned
-    in test_ann and PLANS.md), and per-query cluster assignment +
-    per-query top-k ride the broadcast join + WindowGroupLimit of the
-    in-memory batch path. Completes the amortization story
-    ``ann_ivf_partition_pruned`` pins for one query: N queries cost one
-    pruned scan, not N (SCALE.md measures 32 queries at 1M vecs).
+    pruned scan of the cluster-partitioned index — they are probed on
+    the driver and the union of their probed clusters is pushed as a
+    literal IN, so it lands as PartitionFilters (unprobed clusters
+    never READ; pinned in test_ann and PLANS.md), and per-query cluster
+    assignment + per-query top-k ride the broadcast join +
+    WindowGroupLimit of the in-memory batch path. Completes the
+    amortization story ``ann_ivf_partition_pruned`` pins for one query:
+    N queries cost one pruned scan, not N (SCALE.md measures 32 queries
+    at 1M vecs).
     Exact value-level oracle — same probing rule and tie-breaks per
     query as ``ann_ivf_topk``."""
     from strava_vector_search_spark.operators.ann import (
+        collect_centroids,
         compute_centroids,
         ivf_batch_topk_indexed,
         write_ivf_index,
@@ -13534,12 +13536,13 @@ def ann_ivf_batch_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFram
             f"ann_ivf_batch_partition_pruned: query vecs {qids} not all "
             f"present in {sf_dir}"
         )
-    queries = spark.createDataFrame(
-        [(q, qvecs[q]) for q in qids],
-        "query_id bigint, query_vec array<double>",
-    )
     out = ivf_batch_topk_indexed(
-        spark, path, queries, k=10, nprobe=2, centroids=cents
+        spark,
+        path,
+        [(q, qvecs[q]) for q in qids],
+        k=10,
+        nprobe=2,
+        centroids=collect_centroids(cents),
     )
     return out.select(
         "query_id",

@@ -391,11 +391,16 @@ class SearchService:
         Returns (request_id, id, attribute columns, cluster, similarity,
         rank). It reads only the probed fraction of the index — the
         scale path once the corpus dwarfs the query batch; at full probe
-        it equals sequential :meth:`search` calls."""
+        it equals sequential :meth:`search` calls. The layout's centroid
+        table is read at call time with no Spark job (a layout rebuilt
+        under the same path is picked up) and every request is probed on
+        the driver (``operators/ann.probe_local``), so building the
+        result runs one job: the layout's schema read."""
         import os
 
         from strava_vector_search_spark.operators.ann import (
             ivf_batch_topk_indexed,
+            read_centroids_local,
         )
 
         if self.ivf_path is None:
@@ -404,7 +409,7 @@ class SearchService:
             )
         if not requests:
             raise ValueError("search_batch: empty request list")
-        cents = self.spark.read.parquet(
+        cents = read_centroids_local(
             os.path.join(self.ivf_path, "_centroids")
         )
         # Per-request limit and filter identity ride the broadcast
@@ -423,11 +428,6 @@ class SearchService:
         rows, compiled, _columns = self._parse_requests(
             requests, k_default
         )
-        queries_df = self.spark.createDataFrame(
-            rows,
-            "request_id int, query_vec array<double>, "
-            "_limit int, _filter_id int",
-        )
         pre = None
         if compiled:
             preds = [
@@ -440,13 +440,14 @@ class SearchService:
         ranked = ivf_batch_topk_indexed(
             self.spark,
             self.ivf_path,
-            queries_df,
+            rows,
             k=max(r[2] for r in rows),
             nprobe=nprobe,
             cluster_col=self.ivf_cluster_col,
             id_col=self.id_col,
             centroids=cents,
-            query_id_col="request_id",
+            query_schema="request_id int, query_vec array<double>, "
+            "_limit int, _filter_id int",
             pre_rank_filter=pre,
         )
         return ranked.filter(F.col("rank") <= F.col("_limit")).drop(
@@ -462,8 +463,21 @@ class SearchService:
         (02:438-442) at the service layer: a fresh serving session
         LOADS codebooks + the 96-byte code table, it never retrains.
         The artifact's id column must match the service's; the coarse
-        centroid table must be present (search_approx probes it)."""
+        centroid table must be present (search_approx probes it). The
+        centroid table is also held on the driver
+        (``operators/ann.read_centroids_local``, no Spark job), where
+        :meth:`search_approx_batch` probes it; the code table is spread
+        to cluster width here, once, so no query pays a job to check
+        its width."""
+        import os
+
         from strava_vector_search_spark.operators import pq as PQ
+        from strava_vector_search_spark.operators.ann import (
+            read_centroids_local,
+        )
+        from strava_vector_search_spark.operators.util import (
+            rebalance_for_kernel,
+        )
 
         books, codes, cents, meta = PQ.load_pq_index(self.spark, path)
         if meta["id_col"] != self.id_col:
@@ -487,15 +501,17 @@ class SearchService:
             )
         self.pq_index = (
             books,
-            codes.localCheckpoint(eager=False),
+            rebalance_for_kernel(codes).localCheckpoint(eager=False),
             cents.localCheckpoint(eager=False),
             meta,
+            read_centroids_local(os.path.join(path, "centroids")),
         )
         return self
 
     def _attached_pq(self, lane: str) -> tuple:
-        """(books, codes, centroids, meta) of the attached artifact, once
-        the approximate lanes' preconditions hold."""
+        """(books, codes, centroids, meta, driver-side centroids) of the
+        attached artifact, once the approximate lanes' preconditions
+        hold."""
         if self.pq_index is None:
             raise RuntimeError(
                 f"no PQ index: call attach_pq_index() before {lane}()"
@@ -521,7 +537,7 @@ class SearchService:
         :meth:`search`'s (same scorer on the same stored vectors)."""
         from strava_vector_search_spark.operators import pq as PQ
 
-        books, codes, cents, meta = self._attached_pq("search_approx")
+        books, codes, cents, meta, _local = self._attached_pq("search_approx")
         qv, limit, pred, columns = self._parse_one(request)
         if pred is not None:
             keep_ids = self.corpus.filter(pred).select(self.id_col)
@@ -571,16 +587,22 @@ class SearchService:
         :meth:`search_batch` contract), and requests are grouped, so a
         10^4-request refresh with a handful of filter shapes costs a
         handful of passes over the 96 B/row code table. Returns
-        (request_id, id, corpus columns, similarity, rank)."""
+        (request_id, id, corpus columns, similarity, rank).
+
+        Every request is probed on the driver against the centroids held
+        by :meth:`attach_pq_index` (``operators/ann.probe_local``, the
+        rule of the single-request lane's distributed probe), and the
+        residual offsets use the same held vectors, so building the
+        result runs no Spark job."""
         from strava_vector_search_spark.functions.vector import (
             similarity,
         )
         from strava_vector_search_spark.operators import pq as PQ
-        from strava_vector_search_spark.operators.ann import (
-            rank_probed_clusters,
-        )
+        from strava_vector_search_spark.operators.ann import probe_local
 
-        books, codes, cents, meta = self._attached_pq("search_approx_batch")
+        books, codes, _cents, meta, local = self._attached_pq(
+            "search_approx_batch"
+        )
         if not requests:
             raise ValueError("search_approx_batch: empty request list")
         rows, compiled, _columns = self._parse_requests(
@@ -595,24 +617,18 @@ class SearchService:
                     self.id_col
                 )
                 gcodes = codes.join(keep_ids, self.id_col, "left_semi")
-            gq = self.spark.createDataFrame(
-                [(i, qv) for i, qv, _l, _f in group],
-                "query_id bigint, query_vec array<double>",
-            )
-            probed: dict[int, set] = {i: set() for i, *_ in group}
-            for r in rank_probed_clusters(cents, gq, nprobe).collect():
-                probed[r["query_id"]].add(r["cluster"])
+            probed = {
+                i: set(cs)
+                for (i, *_), cs in zip(
+                    group, probe_local(local, [r[1] for r in group], nprobe)
+                )
+            }
             union = sorted({c for cs in probed.values() for c in cs})
             # residual-stamped artifact (IVFADC): the batch kernel adds
-            # the (Q × cells) q·centroid matrix — union-bounded collect
+            # the (Q × cells) q·centroid matrix
             centroid_vecs = None
             if meta.get("residual"):
-                centroid_vecs = {
-                    int(r["cluster"]): r["centroid"]
-                    for r in cents.filter(
-                        F.col("cluster").isin(union)
-                    ).collect()
-                }
+                centroid_vecs = dict(zip(local.clusters, local.vectors))
             cand_parts.append(
                 PQ.pq_candidates_batch(
                     gcodes.filter(

@@ -179,6 +179,106 @@ def test_rank_probed_clusters_matches_single_query_probe(emb, qvec, spark):
     assert got == expected
 
 
+@pytest.mark.parametrize("dim", [64, 768])
+def test_probe_local_matches_rank_probed_clusters(spark, dim):
+    """The driver probe is the distributed probe: at every nprobe from 1
+    to all cells, each query's probed cells (in rank order) and their
+    rounded cosines are identical, and so are the cosines before
+    rounding. The inputs carry exact ties: cells 5 and 2 share one
+    centroid and several queries equal a centroid, so a tie broken
+    towards the higher id, or a cosine one ulp off (a pairwise instead
+    of a left-fold sum), fails here. Cells are listed out of id order."""
+    import numpy as np
+
+    from strava_vector_search_spark.functions.vector import (
+        cosine_similarity,
+        cosine_similarity_local,
+        cosine_similarity_rounded_local,
+    )
+
+    rng = np.random.default_rng(dim)
+    ids = [7, 5, 0, 2, 9, 3]
+    vecs = rng.normal(size=(len(ids), dim))
+    vecs[3] = vecs[1]  # cell 2 duplicates cell 5
+    cents = spark.createDataFrame(
+        [(c, v.tolist()) for c, v in zip(ids, vecs)],
+        "cluster int, centroid array<double>",
+    )
+    qv = [v.tolist() for v in rng.normal(size=(12, dim))]
+    qv += [vecs[j].tolist() for j in (1, 3, 0)]
+    qv += [(vecs[1] + 1e-3 * rng.normal(size=dim)).tolist()]
+    queries = spark.createDataFrame(
+        list(enumerate(qv)), "query_id bigint, query_vec array<double>"
+    )
+    ranked: dict[int, list] = {}
+    for r in (
+        A.rank_probed_clusters(cents, queries, len(ids))
+        .orderBy("query_id", F.desc("cdist"), F.asc("cluster"))
+        .collect()
+    ):
+        ranked.setdefault(r["query_id"], []).append((r["cluster"], r["cdist"]))
+    local = A.collect_centroids(cents)
+    assert local.clusters == sorted(ids)
+    pos = {c: j for j, c in enumerate(local.clusters)}
+    raw = cosine_similarity_local(np.asarray(qv), local.vectors)
+    for r in (
+        cents.crossJoin(F.broadcast(queries))
+        .select("query_id", "cluster",
+                cosine_similarity(F.col("centroid"), F.col("query_vec")).alias("c"))
+        .collect()
+    ):
+        assert raw[r["query_id"], pos[r["cluster"]]] == r["c"], r
+    cd = cosine_similarity_rounded_local(np.asarray(qv), local.vectors)
+    for q, want in ranked.items():
+        assert [cd[q, pos[c]] for c, _ in want] == [d for _, d in want], q
+    # the duplicated cell ties on every query; the lower id, 2, leads
+    for q in range(len(qv)):
+        order = [c for c, _ in ranked[q]]
+        assert order.index(2) + 1 == order.index(5), (q, order)
+    for nprobe in range(1, len(ids) + 1):
+        got = A.probe_local(local, qv, nprobe)
+        want = [[c for c, _ in ranked[q][:nprobe]] for q in range(len(qv))]
+        assert got == want, nprobe
+
+
+def test_probe_local_refuses_what_cannot_be_ranked():
+    import numpy as np
+
+    with pytest.raises(ValueError, match="cluster 4"):
+        A._local_centroids([1, 4], np.array([[1.0, 0.0], [0.0, 0.0]]))
+    with pytest.raises(ValueError, match="repeats clusters \\[1\\]"):
+        A._local_centroids([1, 1], np.eye(2))
+    cents = A._local_centroids([1, 4], np.eye(2))
+    with pytest.raises(ValueError, match="query 1 .* norm 0"):
+        A.probe_local(cents, [[1.0, 0.0], [0.0, 0.0]], 1)
+    with pytest.raises(ValueError, match="3 values"):
+        A.probe_local(cents, [[1.0, 0.0, 0.0]], 1)
+    assert A.probe_local(cents, [[0.0, 2.0], [1.0, 1.0]], 1) == [[4], [1]]
+
+
+def test_read_centroids_local_runs_no_job(spark, tmp_path):
+    """The pyarrow loader returns what Spark wrote, sorted by cluster,
+    and starts no Spark job doing it."""
+    import numpy as np
+
+    path = str(tmp_path / "cents")
+    spark.createDataFrame(
+        [(3, [0.5, -1.25]), (1, [2.0, 0.125])],
+        "cluster int, centroid array<double>",
+    ).write.parquet(path)
+    sc = spark.sparkContext
+    group = "test_read_centroids_local_runs_no_job"
+    sc.setJobGroup(group, "driver-side centroid load")
+    try:
+        got = A.read_centroids_local(path)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert got.clusters == [1, 3]
+    assert np.array_equal(got.vectors, [[2.0, 0.125], [0.5, -1.25]])
+
+
 def test_ivf_batch_topk_indexed_prunes_and_matches(spark, emb, tmp_path):
     """The indexed batch probe must (a) equal the in-memory batch probe
     row-for-row and (b) push the probed-cluster union into the scan as
@@ -192,13 +292,11 @@ def test_ivf_batch_topk_indexed_prunes_and_matches(spark, emb, tmp_path):
         int(r["vec_id"]): [float(x) for x in r["embedding"]]
         for r in emb.filter(F.col("vec_id").isin(*qids)).collect()
     }
+    rows = [(q, qvecs[q]) for q in qids]
     queries = spark.createDataFrame(
-        [(q, qvecs[q]) for q in qids],
-        "query_id bigint, query_vec array<double>",
+        rows, "query_id bigint, query_vec array<double>"
     )
-    out = A.ivf_batch_topk_indexed(
-        spark, path, queries, k=5, nprobe=2
-    )
+    out = A.ivf_batch_topk_indexed(spark, path, rows, k=5, nprobe=2)
     got = sorted(
         (r["query_id"], r["rank"], r["vec_id"], r["similarity"])
         for r in out.collect()

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+from functools import reduce
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -616,3 +618,201 @@ class TestSearchApproxPQ:
         ).build()
         with pytest.raises(ValueError, match="id_col"):
             svc.attach_pq_index(path)
+
+
+class TestDriverProbe:
+    """Both batch lanes probe on the driver; these pin them to the
+    distributed probe at nprobe < cells. The IVF cells are an attribute
+    (no KMeans) and cells 1 and 2 hold the same texts, so their
+    centroids are equal and tie on every query: at nprobe 1 a run query
+    must probe cell 1, and probing cell 2 returns other doc ids."""
+
+    TEXTS = {
+        0: ["endurance ride", "gravel ride climbs", "criterium race ride"],
+        1: ["tempo run intervals", "long easy run", "hill sprint repeats"],
+        2: ["tempo run intervals", "long easy run", "hill sprint repeats"],
+        3: ["pool swim drills", "open water swim", "swim sprint sets"],
+    }
+    REQUESTS = [
+        {"query": "run intervals", "limit": 3},
+        {"query": "easy run", "filter": {"@gte": {"dist": 5000}}, "limit": 2},
+        {"query": "swim drills ride", "limit": 4},
+    ]
+
+    @pytest.fixture(scope="class")
+    def cell_svc(self, spark, tmp_path_factory):
+        rows, i = [], 0
+        for cell, texts in self.TEXTS.items():
+            for t in texts:
+                i += 1
+                rows.append((i, t, cell, 1000 * (i % 9)))
+        corpus = spark.createDataFrame(
+            rows, "doc_id int, text string, cell int, dist int"
+        )
+        svc = SearchService(
+            spark, corpus, id_col="doc_id", search_col="text",
+            attributes=("cell", "dist"), dim=32,
+            # full cosine on both sides, as in TestSearchBatchIVF
+            assume_normalized=False,
+        )
+        # embedded once and held as rows, so no request re-embeds
+        emb = spark.createDataFrame(
+            svc.build().embeddings.collect(),
+            "doc_id int, embedding array<float>",
+        )
+        svc.attach_embeddings(emb, vec_id_col="doc_id")
+        root = tmp_path_factory.mktemp("driverprobe")
+        return svc.build_ivf(str(root / "ivf"), cluster_col="cell"), root
+
+    def _cell_order(self, svc):
+        """Each request's cells in the distributed probe's order, over
+        the layout's own centroid table: its first n are what nprobe n
+        probes."""
+        import os
+
+        from strava_vector_search_spark.operators.ann import (
+            rank_probed_clusters,
+        )
+
+        queries = svc.spark.createDataFrame(
+            [(i, svc._parse_one(r)[0]) for i, r in enumerate(self.REQUESTS)],
+            "query_id bigint, query_vec array<double>",
+        )
+        cents = svc.spark.read.parquet(
+            os.path.join(svc.ivf_path, "_centroids")
+        )
+        out: dict[int, list] = {}
+        for r in (
+            rank_probed_clusters(cents, queries, len(self.TEXTS))
+            .orderBy("query_id", F.desc("cdist"), F.asc("cluster"))
+            .collect()
+        ):
+            out.setdefault(r["query_id"], []).append(r["cluster"])
+        return out
+
+    @staticmethod
+    def _by_request(frames) -> dict[int, list]:
+        """{request: sorted (doc_id, similarity, rank)} of a batch result
+        (a DataFrame) or of one single-request result per request (a
+        list of DataFrames, run as one union so the test stays fast)."""
+        if isinstance(frames, list):
+            frames = reduce(
+                lambda a, b: a.unionByName(b),
+                [
+                    f.select(
+                        F.lit(i).alias("request_id"), "doc_id", "similarity", "rank"
+                    )
+                    for i, f in enumerate(frames)
+                ],
+            )
+        out: dict[int, list] = {}
+        for r in frames.collect():
+            out.setdefault(r["request_id"], []).append(
+                (r["doc_id"], r["similarity"], r["rank"])
+            )
+        return {i: sorted(v) for i, v in out.items()}
+
+    def test_search_batch_equals_search_within_probed_cells(self, cell_svc):
+        """At nprobe 1 the run queries tie cells 1 and 2 at the top; at
+        nprobe 3 the swim query's cut falls between them."""
+        svc, _root = cell_svc
+        order = self._cell_order(svc)
+        assert order[0][:2] == [1, 2] and order[2][2:] == [1, 2], order
+        for nprobe in (1, 3):
+            want = []
+            for i, req in enumerate(self.REQUESTS):
+                cells = {"@in": {"cell": order[i][:nprobe]}}
+                flt = req.get("filter")
+                want.append(svc.search(
+                    {**req, "filter": {"@and": [flt, cells]} if flt else cells}
+                ))
+            got = self._by_request(
+                svc.search_batch(self.REQUESTS, nprobe=nprobe)
+            )
+            assert got == self._by_request(want), nprobe
+            assert len(got) == len(self.REQUESTS)
+
+    @pytest.fixture(scope="class")
+    def pq_services(self, spark, cell_svc):
+        """The cell corpus behind a raw and a residual-stamped IVF+PQ
+        artifact over the same cells. Every candidate is rescored
+        exactly, so any codebook will do (no training)."""
+        import numpy as np
+
+        from strava_vector_search_spark.operators import pq as PQ
+        from strava_vector_search_spark.operators.ann import compute_centroids
+
+        svc, root = cell_svc
+        emb = svc.embeddings.join(
+            svc.corpus.select("doc_id", "cell"), "doc_id"
+        )
+        cents = compute_centroids(emb, "cell")
+        books = np.random.default_rng(0).normal(size=(4, 4, 8))
+        out = {}
+        for residual in (False, True):
+            src, col = emb, "embedding"
+            if residual:
+                src = PQ.residualize(emb, cents, cluster_col="cell")
+                col = "residual"
+            codes = PQ.encode_pq(
+                src, books, vector_col=col, id_col="doc_id", keep_cols=("cell",)
+            )
+            path = str(root / f"pq_{residual}")
+            PQ.write_pq_index(
+                codes, books, path, id_col="doc_id", cluster_col="cell",
+                centroids=cents, residual=residual,
+            )
+            out[residual] = (
+                SearchService(
+                    spark, svc.corpus, id_col="doc_id", search_col="text",
+                    attributes=svc.attributes, dim=32, assume_normalized=False,
+                )
+                .attach_embeddings(svc.embeddings, vec_id_col="doc_id")
+                .attach_pq_index(path)
+            )
+        return out
+
+    @pytest.mark.parametrize("residual", [False, True])
+    def test_approx_batch_equals_sequential_approx_below_full_probe(
+        self, pq_services, residual
+    ):
+        """search_approx keeps the distributed probe; the batch lane
+        probes on the driver and must return the same rows."""
+        svc = pq_services[residual]
+        assert svc.pq_index[3]["residual"] is residual
+        got = self._by_request(
+            svc.search_approx_batch(self.REQUESTS, nprobe=1, n_cand=20)
+        )
+        assert {d for d, _s, _r in got[0]} <= {4, 5, 6}  # cell 1, not 2
+        assert len(got) == len(self.REQUESTS)
+        assert got == self._by_request(
+            [svc.search_approx(r, nprobe=1, n_cand=20) for r in self.REQUESTS]
+        )
+
+    def test_batch_lanes_plan_without_probe_jobs(
+        self, spark, cell_svc, pq_services
+    ):
+        """Building each batch lane's result runs no probe job: at most
+        the layout's schema read for search_batch, nothing for
+        search_approx_batch. The same job group does record a job when
+        one runs, so an empty list is not a tracking artefact."""
+        sc = spark.sparkContext
+        svc, _root = cell_svc
+        approx = pq_services[True]
+        lanes = (
+            ("plan_search_batch", 1,
+             lambda: svc.search_batch(self.REQUESTS, nprobe=2)),
+            ("plan_search_approx_batch", 0,
+             lambda: approx.search_approx_batch(self.REQUESTS, nprobe=2)),
+        )
+        try:
+            for group, most, plan in lanes:
+                sc.setJobGroup(group, "batch lane planning")
+                df = plan()
+                jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+                assert len(jobs) <= most, (group, jobs)
+                df.collect()
+                assert list(sc.statusTracker().getJobIdsForGroup(group)) != []
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)

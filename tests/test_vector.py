@@ -112,3 +112,25 @@ def test_quantize_roundtrip_accuracy(spark, sf_dir):
     ).collect()
     for r in back:
         assert r["c"] > 0.995
+
+
+def test_round6_array_matches_round6():
+    """The vectorised HALF_UP rounding equals the decimal-string rule on
+    values at and next to 6-dp half-way points, where ``np.round``
+    alone rounds half-even on the binary product."""
+    import numpy as np
+
+    from strava_vector_search_spark.functions.vector import (
+        _round6,
+        _round6_array,
+    )
+
+    ties = [0.1234565, -0.1234565, 0.0000005, -0.0000005, 0.9999995,
+            0.0000015, 0.0000025, 2.5e-6, 1e-7, 0.0, -0.0, 1.0]
+    x = np.array(ties + [np.nextafter(t, 1) for t in ties]
+                 + [np.nextafter(t, -1) for t in ties]
+                 + list(np.random.default_rng(0).uniform(-1, 1, 2000)))
+    got = _round6_array(x)
+    want = [_round6(float(v)) for v in x]
+    assert [repr(float(g)) for g in got] == [repr(w) for w in want]
+    assert float(_round6_array(np.array([0.0000025]))[0]) == 0.000003

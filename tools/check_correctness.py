@@ -6,6 +6,11 @@ order-insensitive values (exact after the queries' own rounding).
 
 Usage: python tools/check_correctness.py [name ...]
 
+If the Spark JVM goes away mid-sweep, the sweep stops at the first gate
+that finds the gateway unreachable, prints the last gate that ran and
+the command that re-runs the rest by name, and counts every gate not
+run as a failure (exit status 1).
+
 Besides the per-gate stdout lines, every full (no-subset) run writes a
 machine-readable artifact in the driver's CORRECTNESS_r{N}.json shape to
 tools/correctness_snapshots/full_run.json (override: $CHECK_JSON_OUT) so
@@ -46,6 +51,21 @@ def _norm(v):
     return v
 
 
+def _jvm_lost(e: BaseException) -> bool:
+    """True when ``e`` (or an exception it was raised from) says the
+    py4j gateway is unreachable: the Spark JVM has exited, so every
+    later gate would fail the same way."""
+    from py4j.protocol import Py4JNetworkError
+
+    seen = set()
+    while e is not None and id(e) not in seen:
+        if isinstance(e, (ConnectionRefusedError, Py4JNetworkError)):
+            return True
+        seen.add(id(e))
+        e = e.__cause__ or e.__context__
+    return False
+
+
 def _rows_to_set(cols, rows):
     idx = sorted(range(len(cols)), key=lambda i: cols[i])
     return sorted(tuple(repr(_norm(r[i])) for i in idx) for r in rows)
@@ -75,19 +95,38 @@ def main() -> int:
             "oracle_rows": oracle_rows, "err": err,
         }
 
-    for name, fn in queries.items():
-        if only and name not in only:
-            continue
+    todo = [n for n in queries if not only or n in only]
+    last_done = None
+    jvm_lost = False
+    for pos, name in enumerate(todo):
+        fn = queries[name]
         t0 = time.time()
         try:
             sdf = fn(spark, SF_DIR)
             s_cols = sdf.columns
             s_rows = [tuple(r) for r in sdf.collect()]
         except Exception as e:
+            if _jvm_lost(e):
+                # one lost JVM, not a cascade of gate failures: stop and
+                # count the gate it hit and every later one as not run
+                jvm_lost = True
+                unrun = todo[pos:]
+                for n in unrun:
+                    failures.append(n)
+                    record(n, err=f"not run: Spark JVM lost ({e})")
+                print(
+                    f"JVM LOST at {name}: {e}\n"
+                    f"last gate run: {last_done or '(none)'}\n"
+                    f"{len(unrun)} gates not run; re-run them with:\n"
+                    f"  python tools/check_correctness.py {' '.join(unrun)}"
+                )
+                break
             failures.append(name)
             record(name, err=f"spark error: {e}")
             print(f"FAIL {name}: spark error: {e}")
+            last_done = name
             continue
+        last_done = name
         if name not in oracles:
             record(name, rows_match=len(s_rows) >= 0, spark_rows=len(s_rows),
                    err="rows-only (no oracle)")
@@ -126,7 +165,8 @@ def main() -> int:
         else:
             print(f"OK   {name}: rows={len(s_rows)} ({time.time()-t0:.1f}s)")
 
-    spark.stop()
+    if not jvm_lost:
+        spark.stop()
     if not only:
         import json
 
