@@ -81,7 +81,7 @@ def score_log_weights(
     double sum. Map-only: no join, no shuffle."""
     # one py4j round-trip for the whole 512-entry literal table (the
     # unrolled F.array(*[F.lit(...).cast(...)]) form paid ~2 socket
-    # round-trips per bucket — see functions.vector.lit_double_array).
+    # round-trips per bucket — see functions.vector.lit_long_array).
     # repr(round(r, 9)) is the shortest round-tripping decimal of the
     # rounded double; parsing it (exact decimal or double literal) and
     # rescaling to (28,12) HALF_UP yields the identical decimal the

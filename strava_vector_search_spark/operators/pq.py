@@ -303,8 +303,8 @@ def residualize(
 
 
 def _cell_offsets_scalar(
-    centroid_vecs: dict[int, "np.ndarray"], query_vec: list[float]
-) -> dict[int, float]:
+    centroid_vecs: dict, query_vec: list[float]
+) -> dict:
     """{cluster: q · centroid} — the per-cell constant of residual ADC.
 
     With inner-product scoring the residual decomposition is exact and
@@ -312,10 +312,11 @@ def _cell_offsets_scalar(
     INDEPENDENT (one (m × k) table per query, same as the raw lane) and
     the cell identity enters only through this scalar — unlike L2
     residual ADC, which needs a fresh LUT per probed cell. Bounded by
-    the probed-cell count, computed driver-side."""
+    the probed-cell count, computed driver-side. Keyed by the cell id
+    itself, so string cell ids work as integer ones do."""
     q = np.asarray(query_vec, dtype=np.float64)
     return {
-        int(c): float(np.dot(q, np.asarray(v, dtype=np.float64)))
+        c: float(np.dot(q, np.asarray(v, dtype=np.float64)))
         for c, v in centroid_vecs.items()
     }
 
@@ -326,7 +327,7 @@ def pq_candidates(
     query_vec: list[float],
     n_cand: int = 100,
     id_col: str = "vec_id",
-    centroid_vecs: dict[int, "np.ndarray"] | None = None,
+    centroid_vecs: dict | None = None,
     cluster_col: str = "cluster",
 ) -> DataFrame:
     """Global top-``n_cand`` ids by ADC inner-product score. Per Arrow batch:
@@ -339,7 +340,13 @@ def pq_candidates(
     ITS cell before the local top (see :func:`_cell_offsets_scalar`).
     ``codes`` must then carry ``cluster_col``, and every scanned row's
     cell must be present — a row from an unprobed/unknown cell fails
-    loudly rather than scoring without its offset."""
+    loudly rather than scoring without its offset.
+
+    The kernel runs at the width ``codes`` arrives with: spread the code
+    scan (``operators/util.rebalance_for_kernel``) before filtering it,
+    as :func:`pq_candidates_batch` asks. Checking the width here, after
+    the probe's semi-join, would run the join's broadcast once for the
+    check and again for the result."""
     import pandas as pd
 
     m, _, sub = books.shape
@@ -378,11 +385,7 @@ def pq_candidates(
             keep = _local_topk_ties(s, ids, n_cand)
             yield pd.DataFrame({id_col: ids[keep], "adc_score": s[keep]})
 
-    from strava_vector_search_spark.operators.util import rebalance_for_kernel
-
-    local = rebalance_for_kernel(codes).mapInPandas(
-        _scan, f"{id_col} {id_type}, adc_score double"
-    )
+    local = codes.mapInPandas(_scan, f"{id_col} {id_type}, adc_score double")
     return local.orderBy(F.desc("adc_score"), F.asc(id_col)).limit(n_cand)
 
 
@@ -400,7 +403,11 @@ def pq_topk_refined(
     of the (tiny) candidate set against the full vectors. The candidate-id
     join is a broadcast semi-join — the 100-row side never shuffles the
     corpus. Returns (id, similarity), exact values, approximate recall."""
-    cand = pq_candidates(codes, books, query_vec, n_cand, id_col)
+    from strava_vector_search_spark.operators.util import rebalance_for_kernel
+
+    cand = pq_candidates(
+        rebalance_for_kernel(codes), books, query_vec, n_cand, id_col
+    )
     pruned = emb.join(
         F.broadcast(cand.select(id_col)), on=id_col, how="left_semi"
     )
@@ -611,12 +618,18 @@ def ivfpq_topk(
     ``assume_normalized`` is passed to the exact rescore
     (:func:`brute_force_topk`): False scores full cosine, for stored
     vectors that are not unit length.
+
+    The ADC kernel's width is checked on ``codes`` as passed, before the
+    probe's semi-join, so a code table already spread to cluster width
+    (``SearchService.attach_pq_index``) builds the result with no job.
     """
     from strava_vector_search_spark.operators.ann import compute_centroids
+    from strava_vector_search_spark.operators.util import rebalance_for_kernel
 
     if centroids is None:
         centroids = compute_centroids(emb, cluster_col, vector_col)
     probed = probe_clusters(centroids, query_vec, nprobe)
+    codes = rebalance_for_kernel(codes)
     cand_codes = codes.join(
         F.broadcast(probed),
         codes[cluster_col] == probed["cluster"],
@@ -625,7 +638,7 @@ def ivfpq_topk(
     centroid_vecs = None
     if residual:
         centroid_vecs = {
-            int(r["cluster"]): r["centroid"]
+            r["cluster"]: r["centroid"]
             for r in centroids.join(
                 F.broadcast(probed), "cluster", "left_semi"
             ).collect()
@@ -660,7 +673,7 @@ def pq_candidates_batch(
     n_cand: int = 100,
     id_col: str = "vec_id",
     cluster_col: str = "cluster",
-    centroid_vecs: dict[int, "np.ndarray"] | None = None,
+    centroid_vecs: dict | None = None,
 ) -> DataFrame:
     """(query_id, id, adc_score) — MANY queries' ADC candidate generation
     in ONE pass over the code table: the batched twin of

@@ -14761,6 +14761,11 @@ def ann_ivfpq_residual_768(spark: SparkSession, sf_dir: str) -> DataFrame:
     (
         clustered, cents, raw_books, raw_codes, res_books, res_codes,
     ) = _planted_residual_ivfpq_768(spark, sf_dir)
+    from strava_vector_search_spark.operators.util import rebalance_for_kernel
+
+    # the ADC kernel runs at the width its codes arrive with: spread the
+    # code scans once, before the per-query probe semi-joins
+    raw_codes, res_codes = map(rebalance_for_kernel, (raw_codes, res_codes))
     n_corpus = clustered.count()
     k, nprobe, qids = 10, 4, (3, 7, 11, 19, 23)
     qrows = (
@@ -14787,7 +14792,7 @@ def ann_ivfpq_residual_768(spark: SparkSession, sf_dir: str) -> DataFrame:
             for r in in_probe.select("doc_id", "embedding").collect()
         }
         centroid_vecs = {
-            int(r["cluster"]): r["centroid"]
+            r["cluster"]: r["centroid"]
             for r in cents.join(
                 F.broadcast(probed), "cluster", "left_semi"
             ).collect()

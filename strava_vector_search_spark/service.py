@@ -21,6 +21,8 @@ filterable ATTRIBUTES + freshness lag) and queries it with a JSON request
 
   ========================  =================================================
   ``search``                single request, exact: filter → cosine → top-k
+                            over the service's pinned corpus ⋈ embeddings
+                            table (one job per lookup)
   ``search_batch``          many requests, one pruned scan of the IVF layout
   ``search_approx``         single request, compressed: filter semi-join of
                             the code table + ``operators/pq.ivfpq_topk``
@@ -126,6 +128,10 @@ class SearchService:
     ivf_cluster_col: str = "cluster"
     # persisted IVF+PQ artifact (attach_pq_index / search_approx)
     pq_index: tuple | None = field(default=None, repr=False)
+    # search()'s pinned serving table: (corpus, embeddings, table)
+    _serving: tuple | None = field(
+        default=None, init=False, repr=False, compare=False
+    )
 
     def build(self) -> "SearchService":
         """Materialize the index: embed the search column into a narrow
@@ -693,19 +699,62 @@ class SearchService:
         rows = [r.asDict(recursive=True) for r in self.search(request).collect()]
         return json.dumps({"results": rows}, default=str)
 
+    def _serving_table(self) -> DataFrame:
+        """``corpus ⋈ embeddings``, pinned: a ``localCheckpoint`` of the
+        join, so a lookup scans memory-resident rows in one job instead
+        of re-reading both tables and broadcasting the corpus. Built once
+        per (``corpus``, ``embeddings``) pair, checked by identity on
+        every call: assigning ``svc.corpus`` or attaching embeddings
+        rebuilds it (materialised by the first lookup that reads it) and
+        releases the replaced table's blocks. A checkpoint, not
+        ``cache()``: Spark's cache manager matches a parquet scan by its
+        root paths, so a cached plan would serve the old rows to a new
+        DataFrame over files rewritten outside Spark."""
+        if self.embeddings is None:
+            raise RuntimeError(
+                "service not built: call build() or attach_embeddings()"
+            )
+        pinned = self._serving
+        if (
+            pinned is None
+            or pinned[0] is not self.corpus
+            or pinned[1] is not self.embeddings
+        ):
+            if pinned is not None:
+                # the LogicalRDD under the checkpointed plan holds the
+                # blocks
+                pinned[2]._jdf.queryExecution().logical().rdd().unpersist(
+                    False
+                )
+            table = self.corpus.join(self.embeddings, self.id_col)
+            pinned = (
+                self.corpus,
+                self.embeddings,
+                table.localCheckpoint(eager=False),
+            )
+            self._serving = pinned
+        return pinned[2]
+
     def search(self, request: dict | str) -> DataFrame:
         """Serve one JSON request {query|query_vec, columns, filter, limit}.
 
         Returns one row per hit: requested columns + similarity + rank —
         the flattened shape the reference builds with
         PARSE_JSON → ['results'] → FLATTEN (01:200-219).
+
+        Scores the service's pinned serving table (:meth:`_serving_table`)
+        with the query vector as one typed literal, so once the table is
+        materialised a lookup is one Spark job: filter, score and top-k
+        over memory-resident rows. The lookup after ``corpus`` or
+        ``embeddings`` is replaced pays the rebuild (the corpus broadcast
+        and a full scan). The table is memory-bound by design: the
+        interactive lookup's working set, not the 100 TB batch lanes'.
         """
         if self.embeddings is None:
             raise RuntimeError("service not built: call build() or attach_embeddings()")
         qv, limit, pred, columns = self._parse_one(request)
-        base = self.corpus.join(self.embeddings, self.id_col)
         top = brute_force_topk(
-            base,
+            self._serving_table(),
             qv,
             k=limit,
             id_col=self.id_col,
@@ -824,13 +873,12 @@ class ResultCache:
 
 
 def warm(svc: SearchService) -> SearchService:
-    """Pre-warm (02:424): pin corpus + index in executor memory and
-    materialize both, so first-query latency excludes the cold scan."""
-    svc.corpus = svc.corpus.cache()
-    svc.corpus.count()
-    if svc.embeddings is not None:
-        svc.embeddings = svc.embeddings.cache()
-        svc.embeddings.count()
+    """Pre-warm (02:424): materialise the service's pinned serving table
+    now, so the first lookup excludes the cold scan and the corpus
+    broadcast. Nothing is ``cache()``-d: a cached parquet plan would
+    also serve any later DataFrame over the same paths, stale rows
+    included, once the files are rewritten outside Spark."""
+    svc._serving_table().count()
     return svc
 
 

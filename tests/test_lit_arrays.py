@@ -3,9 +3,10 @@
 Optimization round 12: the unrolled ``F.array(*[F.lit(x) for x in xs])``
 form issued one py4j socket round-trip per element — ~680 ms of pure
 driver-side chatter for every 768-dim query-vector literal, re-paid at
-every query construction. The ``lit_*_array`` helpers render the whole
-literal as one SQL snippet (one round-trip, ~1.6 ms at dim 768). These
-tests pin BIT-level value parity with the unrolled form, because every
+every query construction. ``lit_long_array`` and ``lit_string_array``
+render the whole literal as one SQL snippet; ``lit_double_array`` builds
+one typed catalyst literal from the vector's raw bytes. These tests pin
+BIT-level value parity with the unrolled form, because every
 vs_/ann_/pq_ oracle hash rides on the query literal's exact bits.
 """
 
@@ -93,3 +94,26 @@ def test_string_array_parity_with_active_chars(spark):
     old = _one(df, F.array(*[F.lit(v) for v in vals]))
     new = _one(df, lit_string_array(vals))
     assert old == new
+
+
+def test_double_array_is_one_typed_literal(spark):
+    """The vector enters the plan as ONE literal carrying the raw float64
+    bits, typed array<double> with containsNull = false, NaN and inf
+    included."""
+    import numpy as np
+    from pyspark.sql.types import ArrayType, DoubleType
+
+    vals = np.concatenate([
+        np.random.default_rng(11).normal(size=768),
+        [-0.0, 5e-324, 1.797e308, 1 / 3, np.nan, np.inf, -np.inf],
+    ])
+    df = spark.range(1).select(lit_double_array(vals.tolist()).alias("a"))
+    assert df.schema["a"].dataType == ArrayType(DoubleType(), False)
+    got = np.array(df.collect()[0]["a"], dtype=np.float64)
+    assert got.tobytes() == vals.astype(np.float64).tobytes()
+    expr = df._jdf.queryExecution().analyzed().expressions().head()
+    assert expr.child().getClass().getSimpleName() == "Literal"
+    # numpy input, and the empty vector types as array<double> too
+    assert _one(spark.range(1), lit_double_array(vals[:3])) == vals[:3].tolist()
+    empty = spark.range(1).select(lit_double_array([]).alias("a"))
+    assert empty.schema["a"].dataType == ArrayType(DoubleType(), False)

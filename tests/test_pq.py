@@ -127,6 +127,35 @@ def test_ivfpq_equals_pq_within_probed_clusters(spark, emb, books):
     ]
 
 
+def test_ivfpq_kernel_runs_at_cluster_width(spark):
+    """ivfpq_topk checks the ADC kernel's width on the code scan, before
+    the probe's semi-join: a one-partition code table of >= 2048 rows is
+    spread round-robin ahead of the kernel."""
+    import numpy as np
+
+    rng = np.random.default_rng(3)
+    n, m = 2100, 2
+    books = rng.normal(size=(m, 4, 2))
+    codes = spark.createDataFrame(
+        [
+            (i, i % 4, bytes(rng.integers(0, 4, m, dtype=np.uint8)))
+            for i in range(n)
+        ],
+        "vec_id long, label int, code binary",
+    ).coalesce(1)
+    cents = spark.createDataFrame(
+        [(c, rng.normal(size=m * 2).tolist()) for c in range(4)],
+        "cluster int, centroid array<double>",
+    )
+    emb = spark.createDataFrame([(0, [1.0] * (m * 2))], "vec_id long, embedding array<double>")
+    out = PQ.ivfpq_topk(
+        emb, codes, books, [1.0, 0.5, -0.5, 0.25], nprobe=2, centroids=cents
+    )
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    width = spark.sparkContext.defaultParallelism
+    assert f"RoundRobinPartitioning({width})" in plan, plan
+
+
 def test_ivfpq_never_returns_unprobed_cluster(spark, emb, books):
     codes = PQ.encode_pq(emb, books, keep_cols=("label",)).localCheckpoint()
     qv = [float(x) for x in emb.filter(F.col("vec_id") == 7).head()["embedding"]]

@@ -9,6 +9,7 @@ from strava_vector_search_spark.service import (
     FilterDSLError,
     SearchService,
     compile_filter,
+    warm,
 )
 
 
@@ -816,3 +817,187 @@ class TestDriverProbe:
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
             sc.setLocalProperty("spark.job.description", None)
+
+    def test_search_approx_plans_without_jobs(self, spark, pq_services):
+        """Building a raw-artifact search_approx result runs no job: the
+        kernel's width is checked on the attached code table (spread at
+        attach), not on the probe's semi-join."""
+        sc = spark.sparkContext
+        group = "test_search_approx_plans_without_jobs"
+        sc.setJobGroup(group, "single-request approximate planning")
+        try:
+            df = pq_services[False].search_approx(self.REQUESTS[0], nprobe=2)
+            assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+            assert len(df.collect()) == self.REQUESTS[0]["limit"]
+            assert list(sc.statusTracker().getJobIdsForGroup(group)) != []
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+
+class TestPinnedServingTable:
+    """search() scores a pinned corpus ⋈ embeddings table the service
+    owns: rebuilt when either side is replaced, never stale, one job
+    per lookup once built, one table held at a time."""
+
+    REQ = {"query": "hill repeats climbing", "limit": 2}
+
+    @staticmethod
+    def _ids(svc, req):
+        return [r["doc_id"] for r in svc.search(req).orderBy("rank").collect()]
+
+    def test_search_reads_its_writes(self, spark, tmp_path):
+        """A doc appended through refresh_batch, with corpus and
+        embeddings re-read and reassigned, is found at rank 1."""
+        from strava_vector_search_spark.streaming.refresh import (
+            default_embedder,
+            refresh_batch,
+        )
+
+        corpus = str(tmp_path / "corpus")
+        spark.createDataFrame(
+            [
+                (1, "interval run workout", "run"),
+                (2, "easy recovery jog", "run"),
+                (3, "endurance ride cycling", "ride"),
+                (4, "hill repeats climbing ride", "ride"),
+            ],
+            "doc_id int, text string, sport_type string",
+        ).write.parquet(corpus)
+        svc = SearchService(
+            spark, spark.read.parquet(corpus), search_col="text",
+            attributes=("sport_type",), dim=32,
+            index_path=str(tmp_path / "index"),
+        ).build()
+        req = {"query": "open water swim sprint", "limit": 2}
+        assert 9 not in self._ids(svc, req)
+        new = spark.createDataFrame(
+            [(9, "open water swim sprint", "swim")],
+            "doc_id int, text string, sport_type string",
+        )
+        new.write.mode("append").parquet(corpus)
+        refresh_batch(
+            new, svc.embeddings, default_embedder("doc_id", "text", 32)
+        ).write.mode("append").parquet(svc.index_path)
+        svc.corpus = spark.read.parquet(corpus)
+        svc.attach_embeddings(spark.read.parquet(svc.index_path), "doc_id")
+        assert self._ids(svc, req)[0] == 9
+
+    def test_rewritten_corpus_is_not_served_stale(self, spark, tmp_path):
+        """Files rewritten outside Spark: a new service over a fresh read
+        of the same path serves the new rows (a cache()-d plan over the
+        same path would be matched and serve the old ones)."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        corpus = tmp_path / "corpus"
+        corpus.mkdir()
+        texts = ["interval run workout", "hill repeats climbing ride"]
+
+        def write(name, sports):
+            for f in corpus.iterdir():
+                f.unlink()
+            pq.write_table(
+                pa.table({
+                    "doc_id": pa.array([1, 2], pa.int32()),
+                    "text": texts,
+                    "sport_type": sports,
+                }),
+                str(corpus / name),
+            )
+
+        write("a.parquet", ["run", "ride"])
+        emb = SearchService(
+            spark, spark.read.parquet(str(corpus)), search_col="text", dim=32
+        ).build().embeddings
+        emb = spark.createDataFrame(emb.collect(), emb.schema)
+
+        def sports():
+            svc = SearchService(
+                spark, spark.read.parquet(str(corpus)), search_col="text",
+                attributes=("sport_type",), dim=32,
+            ).attach_embeddings(emb, "doc_id")
+            warm(svc)
+            return {
+                r["doc_id"]: r["sport_type"]
+                for r in svc.search({**self.REQ, "limit": 5}).collect()
+            }
+
+        assert sports() == {1: "run", 2: "ride"}
+        write("b.parquet", ["swim", "swim"])
+        assert sports() == {1: "swim", 2: "swim"}
+
+    def test_second_search_runs_one_job(self, spark, docs, svc):
+        """Once the table is pinned, building and collecting a filtered
+        lookup runs exactly one Spark job."""
+        fresh = SearchService(
+            spark, docs, id_col="doc_id", search_col="text",
+            attributes=svc.attributes, dim=32,
+        ).attach_embeddings(svc.embeddings, "doc_id")
+        req = {**self.REQ, "filter": {"@eq": {"sport_type": "ride"}}}
+        want = self._ids(fresh, req)
+        sc = spark.sparkContext
+        group = "test_second_search_runs_one_job"
+        sc.setJobGroup(group, "pinned lookup")
+        try:
+            assert self._ids(fresh, req) == want == [4, 5]
+            assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    def test_replaced_tables_release_their_blocks(self, spark, docs, svc):
+        """Five reassign + search cycles leave one pinned table
+        registered, not five."""
+        sc = spark.sparkContext
+        before = set(sc._jsc.getPersistentRDDs().keySet())
+        fresh = SearchService(
+            spark, docs, id_col="doc_id", search_col="text", dim=32
+        ).attach_embeddings(svc.embeddings, "doc_id")
+        for _ in range(5):
+            fresh.corpus = docs.select("*")
+            fresh.attach_embeddings(svc.embeddings.select("*"), "doc_id")
+            assert self._ids(fresh, self.REQ)[0] in (4, 5)
+        pinned = set(sc._jsc.getPersistentRDDs().keySet()) - before
+        assert len(pinned) == 1, pinned
+
+
+def test_string_cell_residual_approx_equals_batch(spark, docs, svc, tmp_path):
+    """A residual IVF+PQ artifact whose cells are sport_type strings: the
+    single-request lane keys its centroid offsets by the cell id, as the
+    batch lane does, and returns exactly the batch lane's rows."""
+    import numpy as np
+
+    from strava_vector_search_spark.operators import pq as PQ
+    from strava_vector_search_spark.operators.ann import compute_centroids
+
+    emb = svc.embeddings.join(docs.select("doc_id", "sport_type"), "doc_id")
+    emb = spark.createDataFrame(emb.collect(), emb.schema)
+    cents = compute_centroids(emb, "sport_type")
+    books = np.random.default_rng(0).normal(size=(4, 4, 8))
+    codes = PQ.encode_pq(
+        PQ.residualize(emb, cents, cluster_col="sport_type"), books,
+        vector_col="residual", id_col="doc_id", keep_cols=("sport_type",),
+    )
+    path = str(tmp_path / "pq")
+    PQ.write_pq_index(
+        codes, books, path, id_col="doc_id", cluster_col="sport_type",
+        centroids=cents, residual=True,
+    )
+    approx = (
+        SearchService(
+            spark, docs, id_col="doc_id", search_col="text",
+            attributes=svc.attributes, dim=32,
+        )
+        .attach_embeddings(emb.drop("sport_type"), "doc_id")
+        .attach_pq_index(path)
+    )
+    req = {"query": "easy jog", "filter": {"@ne": {"difficulty": "hard"}}, "limit": 3}
+    got, want = (
+        [(r["doc_id"], r["similarity"], r["rank"]) for r in df.orderBy("rank").collect()]
+        for df in (
+            approx.search_approx(req, nprobe=2, n_cand=6),
+            approx.search_approx_batch([req], nprobe=2, n_cand=6),
+        )
+    )
+    assert got == want and len(got) == 3
