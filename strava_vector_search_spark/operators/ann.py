@@ -83,27 +83,21 @@ def ivf_topk(
 ) -> DataFrame:
     """IVF search: probe the nprobe nearest clusters, brute-force inside.
 
-    The centroid ranking is a k-row computation (broadcast-trivial); the
-    candidate scan is an equi-filter on the cluster column — partition
-    pruning when the table is written partitioned by it. Ties in centroid
-    distance break by cluster id; final top-k ties break by vector id.
+    The centroid table (k rows) is collected once and the query probed
+    on the driver (:func:`probe_local`); the candidate scan is a literal
+    ``IN`` on the cluster column — a static partition filter when the
+    table is written partitioned by it. Ties in centroid distance break
+    by cluster id; final top-k ties break by vector id.
     """
     if centroids is None:
         centroids = compute_centroids(emb, cluster_col, vector_col)
-    qcol = lit_double_array(query_vec)
-    probed = (
-        centroids.withColumn(
-            "cdist", cosine_similarity_rounded(F.col("centroid"), qcol)
-        )
-        .orderBy(F.desc("cdist"), F.asc("cluster"))
-        .limit(nprobe)
-        .select("cluster")
-    )
-    cand = emb.join(
-        F.broadcast(probed), emb[cluster_col] == probed["cluster"], "left_semi"
-    )
+    (probed,) = probe_local(collect_centroids(centroids), [query_vec], nprobe)
     return brute_force_topk(
-        cand, query_vec, k=k, vector_col=vector_col, id_col=id_col
+        emb.filter(F.col(cluster_col).isin(probed)),
+        query_vec,
+        k=k,
+        vector_col=vector_col,
+        id_col=id_col,
     )
 
 
@@ -116,10 +110,10 @@ def rank_probed_clusters(
 ) -> DataFrame:
     """(query_id, cluster, cdist) — each query's ``nprobe`` nearest coarse
     clusters by rounded centroid cosine, ties to the lower cluster id. A
-    |queries| x |clusters| cross of two broadcast-tiny tables; this is the
-    probing rule :func:`ivf_topk` applies per query and
-    :func:`ivf_batch_topk` applies for the whole batch — shared so scan
-    accounting (which partitions WOULD be read) uses the identical rule."""
+    |queries| x |clusters| cross of two broadcast-tiny tables. It is the
+    probe of the in-memory :func:`ivf_batch_topk`, and the distributed
+    reference that :func:`probe_local`, the driver-side probe of every
+    other lane, is pinned to bit for bit (tests/test_ann.py)."""
     from pyspark.sql import Window
 
     wprobe = Window.partitionBy(query_id_col).orderBy(
@@ -207,6 +201,9 @@ def probe_local(
     """Each query's ``nprobe`` probed clusters, nearest first: the rule of
     :func:`rank_probed_clusters` (rounded centroid cosine descending,
     ties to the lower cluster id) run on the driver with no Spark job.
+    This is the probe of every per-query lane: :func:`ivf_topk`,
+    :func:`ivf_batch_topk_indexed` and ``operators/pq.ivfpq_candidates``
+    (so ``ivfpq_topk`` and both compressed service lanes).
     The cosine is :func:`cosine_similarity_rounded_local`, bit-identical
     to the distributed one, and the stable sort over the id-ordered
     cells keeps tied cells in ascending id order. Queries are ranked in

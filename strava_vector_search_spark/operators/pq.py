@@ -35,6 +35,12 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from strava_vector_search_spark.operators.ann import (
+    LocalCentroids,
+    collect_centroids,
+    compute_centroids,
+    probe_local,
+)
 from strava_vector_search_spark.operators.search import (
     _local_topk_ties,
     brute_force_topk,
@@ -302,93 +308,6 @@ def residualize(
     )
 
 
-def _cell_offsets_scalar(
-    centroid_vecs: dict, query_vec: list[float]
-) -> dict:
-    """{cluster: q · centroid} — the per-cell constant of residual ADC.
-
-    With inner-product scoring the residual decomposition is exact and
-    cheap: q·x = q·(c + r) = q·c + q·r, so the residual LUT is CELL-
-    INDEPENDENT (one (m × k) table per query, same as the raw lane) and
-    the cell identity enters only through this scalar — unlike L2
-    residual ADC, which needs a fresh LUT per probed cell. Bounded by
-    the probed-cell count, computed driver-side. Keyed by the cell id
-    itself, so string cell ids work as integer ones do."""
-    q = np.asarray(query_vec, dtype=np.float64)
-    return {
-        c: float(np.dot(q, np.asarray(v, dtype=np.float64)))
-        for c, v in centroid_vecs.items()
-    }
-
-
-def pq_candidates(
-    codes: DataFrame,
-    books: np.ndarray,
-    query_vec: list[float],
-    n_cand: int = 100,
-    id_col: str = "vec_id",
-    centroid_vecs: dict | None = None,
-    cluster_col: str = "cluster",
-) -> DataFrame:
-    """Global top-``n_cand`` ids by ADC inner-product score. Per Arrow batch:
-    build nothing, look up the precomputed (m × k) table, local top under
-    the deterministic tie rule; only batch-local winners reach the global
-    rank, so the shuffle is n_batches · n_cand tiny rows.
-
-    ``centroid_vecs`` (residual-encoded codes only): the probed cells'
-    coarse centroids; each row's score gains the scalar q·centroid of
-    ITS cell before the local top (see :func:`_cell_offsets_scalar`).
-    ``codes`` must then carry ``cluster_col``, and every scanned row's
-    cell must be present — a row from an unprobed/unknown cell fails
-    loudly rather than scoring without its offset.
-
-    The kernel runs at the width ``codes`` arrives with: spread the code
-    scan (``operators/util.rebalance_for_kernel``) before filtering it,
-    as :func:`pq_candidates_batch` asks. Checking the width here, after
-    the probe's semi-join, would run the join's broadcast once for the
-    check and again for the result."""
-    import pandas as pd
-
-    m, _, sub = books.shape
-    q = np.asarray(query_vec, dtype=np.float64).reshape(m, sub)
-    lut = np.einsum("mkd,md->mk", books, q)
-    offsets = (
-        None
-        if centroid_vecs is None
-        else _cell_offsets_scalar(centroid_vecs, query_vec)
-    )
-    id_type = codes.schema[id_col].dataType.simpleString()
-
-    def _scan(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            C = np.frombuffer(b"".join(pdf["code"]), dtype=np.uint8).reshape(
-                len(pdf), m
-            )
-            s = lut[np.arange(m)[None, :], C].sum(1)
-            if offsets is not None:
-                off = (
-                    pdf[cluster_col]
-                    .map(offsets)
-                    .to_numpy(dtype=np.float64, na_value=np.nan)
-                )
-                if np.isnan(off).any():
-                    raise ValueError(
-                        "pq_candidates: scanned a residual code row whose "
-                        f"{cluster_col} has no centroid offset — the scan "
-                        "must be pre-filtered to the probed cells"
-                    )
-                s = s + off
-            s = s.round(6)
-            ids = pdf[id_col].to_numpy()
-            keep = _local_topk_ties(s, ids, n_cand)
-            yield pd.DataFrame({id_col: ids[keep], "adc_score": s[keep]})
-
-    local = codes.mapInPandas(_scan, f"{id_col} {id_type}, adc_score double")
-    return local.orderBy(F.desc("adc_score"), F.asc(id_col)).limit(n_cand)
-
-
 def pq_topk_refined(
     emb: DataFrame,
     codes: DataFrame,
@@ -400,14 +319,33 @@ def pq_topk_refined(
     id_col: str = "vec_id",
 ) -> DataFrame:
     """ADC candidate generation over the code table, exact cosine rescoring
-    of the (tiny) candidate set against the full vectors. The candidate-id
-    join is a broadcast semi-join — the 100-row side never shuffles the
-    corpus. Returns (id, similarity), exact values, approximate recall."""
+    of the (tiny) candidate set against the full vectors
+    (:func:`rescore_candidates`). Returns (id, similarity), exact values,
+    approximate recall."""
     from strava_vector_search_spark.operators.util import rebalance_for_kernel
 
-    cand = pq_candidates(
-        rebalance_for_kernel(codes), books, query_vec, n_cand, id_col
+    cand = pq_candidates_batch(
+        rebalance_for_kernel(codes), books, [(0, query_vec)], None, n_cand,
+        id_col,
     )
+    return rescore_candidates(
+        emb, cand, query_vec, k, vector_col, id_col, assume_normalized=True
+    )
+
+
+def rescore_candidates(
+    emb: DataFrame,
+    cand: DataFrame,
+    query_vec: list[float],
+    k: int,
+    vector_col: str = "embedding",
+    id_col: str = "vec_id",
+    assume_normalized: bool = True,
+) -> DataFrame:
+    """The refine stage of every single-query PQ lane: exact top-``k``
+    (:func:`brute_force_topk`, a heap) over the vectors of ``cand``'s
+    ids. The candidate-id join is a broadcast semi-join — the
+    ``n_cand``-row side never shuffles the corpus."""
     pruned = emb.join(
         F.broadcast(cand.select(id_col)), on=id_col, how="left_semi"
     )
@@ -417,7 +355,7 @@ def pq_topk_refined(
         k=k,
         vector_col=vector_col,
         id_col=id_col,
-        assume_normalized=True,
+        assume_normalized=assume_normalized,
     )
 
 
@@ -562,29 +500,6 @@ def load_pq_index(
     return books, codes, cents, meta
 
 
-def probe_clusters(
-    centroids: DataFrame, query_vec: list[float], nprobe: int
-) -> DataFrame:
-    """The nprobe nearest clusters by centroid cosine, ties to the lowest
-    cluster id — the ONE probe definition shared by ivfpq_topk and the
-    gates' exact-within-probe comparisons (they must agree textually or a
-    recall check silently compares against the wrong cluster set)."""
-    from strava_vector_search_spark.functions.vector import (
-        cosine_similarity_rounded,
-        lit_double_array,
-    )
-
-    qcol = lit_double_array(query_vec)
-    return (
-        centroids.withColumn(
-            "cdist", cosine_similarity_rounded(F.col("centroid"), qcol)
-        )
-        .orderBy(F.desc("cdist"), F.asc("cluster"))
-        .limit(nprobe)
-        .select("cluster")
-    )
-
-
 def ivfpq_topk(
     emb: DataFrame,
     codes: DataFrame,
@@ -601,67 +516,46 @@ def ivfpq_topk(
     assume_normalized: bool = True,
 ) -> DataFrame:
     """IVF + PQ composed — the standard billion-scale ANN recipe (FAISS
-    IVFPQ): IVF prunes WHICH codes are scanned (cluster semi-join →
-    partition pruning on a cluster-partitioned code table), PQ shrinks
-    WHAT the scan reads (m-byte codes, ADC lookups). The fat vector table
-    is touched only to exact-rescore the ``n_cand`` surviving candidates.
+    IVFPQ): IVF prunes WHICH codes are scanned (a literal ``IN`` on the
+    cluster column → partition pruning on a cluster-partitioned code
+    table), PQ shrinks WHAT the scan reads (m-byte codes, ADC lookups).
+    The fat vector table is touched only to exact-rescore the ``n_cand``
+    surviving candidates (:func:`rescore_candidates`).
 
     ``codes`` must carry ``cluster_col`` (encode with
-    ``encode_pq(..., keep_cols=(cluster_col,))``). Centroid probe and
-    rescore follow the ivf_topk / pq_topk_refined contracts exactly.
+    ``encode_pq(..., keep_cols=(cluster_col,))``). The centroid table
+    (``compute_centroids`` of ``emb`` when None) is collected once, and
+    the candidates come from :func:`ivfpq_candidates`, the stage the
+    service lanes share.
 
     ``residual=True``: the codes were encoded over
     :func:`residualize` output (true IVFADC) — ADC adds each probed
-    cell's q·centroid scalar; the probed centroid VECTORS are collected
-    (bounded by nprobe) to compute the offsets.
+    cell's q·centroid scalar.
 
     ``assume_normalized`` is passed to the exact rescore
     (:func:`brute_force_topk`): False scores full cosine, for stored
     vectors that are not unit length.
 
     The ADC kernel's width is checked on ``codes`` as passed, before the
-    probe's semi-join, so a code table already spread to cluster width
-    (``SearchService.attach_pq_index``) builds the result with no job.
+    probe's filter.
     """
-    from strava_vector_search_spark.operators.ann import compute_centroids
     from strava_vector_search_spark.operators.util import rebalance_for_kernel
 
     if centroids is None:
         centroids = compute_centroids(emb, cluster_col, vector_col)
-    probed = probe_clusters(centroids, query_vec, nprobe)
-    codes = rebalance_for_kernel(codes)
-    cand_codes = codes.join(
-        F.broadcast(probed),
-        codes[cluster_col] == probed["cluster"],
-        "left_semi",
-    )
-    centroid_vecs = None
-    if residual:
-        centroid_vecs = {
-            r["cluster"]: r["centroid"]
-            for r in centroids.join(
-                F.broadcast(probed), "cluster", "left_semi"
-            ).collect()
-        }
-    cand = pq_candidates(
-        cand_codes,
+    cand = ivfpq_candidates(
+        rebalance_for_kernel(codes),
         books,
-        query_vec,
+        [(0, query_vec)],
+        collect_centroids(centroids),
+        nprobe,
         n_cand,
         id_col,
-        centroid_vecs=centroid_vecs,
-        cluster_col=cluster_col,
+        cluster_col,
+        residual,
     )
-    pruned = emb.join(
-        F.broadcast(cand.select(id_col)), on=id_col, how="left_semi"
-    )
-    return brute_force_topk(
-        pruned,
-        query_vec,
-        k=k,
-        vector_col=vector_col,
-        id_col=id_col,
-        assume_normalized=assume_normalized,
+    return rescore_candidates(
+        emb, cand, query_vec, k, vector_col, id_col, assume_normalized
     )
 
 
@@ -669,35 +563,45 @@ def pq_candidates_batch(
     codes: DataFrame,
     books: np.ndarray,
     queries: list[tuple[int, list[float]]],
-    probed: dict[int, set],
+    probed: dict[int, set] | None = None,
     n_cand: int = 100,
     id_col: str = "vec_id",
     cluster_col: str = "cluster",
     centroid_vecs: dict | None = None,
 ) -> DataFrame:
-    """(query_id, id, adc_score) — MANY queries' ADC candidate generation
-    in ONE pass over the code table: the batched twin of
-    :func:`pq_candidates`, with the per-query cluster mask applied INSIDE
-    the Arrow kernel so each query's candidates come only from ITS probed
-    clusters (single-request vs batch parity: same LUT math, same probe
-    rule, same (score DESC, id ASC) tie handling — a query never picks up
-    a candidate from a cluster it did not probe, which would silently
-    raise batch recall above the single path's).
+    """(query_id, id, adc_score) — the ADC kernel: global top-``n_cand``
+    ids per query by asymmetric inner-product score, for every query in
+    ONE pass over the code table. Per query, one (m × k) lookup table of
+    query-subvector · codebook-centroid products; a row's score is m
+    table lookups added in subspace order, rounded to 6 dp.
 
-    Per batch: one (Q, B) score matrix assembled by m gather-adds from
-    the stacked (Q, m, k) LUTs, masked by probe membership
-    (probe-matrix fancy index — no per-row Python), then the
-    deterministic local top-``n_cand`` per query; only batch-local
-    winners reach the global per-query rank, so the shuffle carries
-    n_batches * Q * n_cand tiny rows. The global cut is a per-query
-    ranking window — WindowGroupLimit keeps map tasks bounded.
+    ``probed`` maps each query id to its probed cells: the per-query
+    cell mask is applied INSIDE the Arrow kernel, so each query's
+    candidates come only from ITS probed cells (a query never picks up
+    a candidate from a cell it did not probe). ``codes`` then carries
+    ``cluster_col``; rows outside every query's cells are skipped.
+    ``probed=None`` applies no mask: plain PQ (:func:`pq_topk_refined`),
+    where ``codes`` needs no cell column.
 
     ``centroid_vecs`` (residual-encoded codes only): coarse centroid
-    vectors covering every cluster in the probe union; scoring adds the
-    (Q × cells) matrix of q·centroid constants via the same fancy index
-    as the probe mask — the batched form of the IVFADC offset (see
-    :func:`_cell_offsets_scalar`). A union cluster with no centroid
-    fails at matrix build, before any executor work.
+    vectors covering every probed cell (every cell of the scan when
+    ``probed`` is None). With inner-product scoring the residual
+    decomposition is exact and cheap: q·x = q·(c + r) = q·c + q·r, so
+    the residual LUT is CELL-INDEPENDENT (one (m × k) table per query,
+    as in the raw lane) and the cell enters only through the scalar
+    q·c — unlike L2 residual ADC, which needs a fresh LUT per probed
+    cell. The (Q × cells) matrix of those scalars is added through the
+    same fancy index as the mask. Cells are keyed by their id, so
+    string cell ids work as integer ones do; a probed cell with no
+    centroid fails at matrix build, before any executor work.
+
+    Per batch: one (Q, B) score matrix assembled by m gather-adds from
+    the stacked (Q, m, k) LUTs, masked by probe membership (no per-row
+    Python), then the deterministic local top-``n_cand`` per query
+    (ties to the lower id); only batch-local winners reach the global
+    per-query rank, so the shuffle carries n_batches * Q * n_cand tiny
+    rows. The global cut is a per-query ranking window —
+    WindowGroupLimit keeps map tasks bounded.
 
     The kernel runs at the width ``codes`` arrives with: spread the code
     scan (``operators/util.rebalance_for_kernel``) before filtering it.
@@ -719,25 +623,29 @@ def pq_candidates_batch(
             for _q, v in queries
         ]
     )
-    union = sorted({c for cs in probed.values() for c in cs})
-    cl_index = {c: j for j, c in enumerate(union)}
-    probe_mat = np.zeros((len(q_ids), len(union)), dtype=bool)
-    for qi, q in enumerate(q_ids):
-        for c in probed.get(q, ()):
-            probe_mat[qi, cl_index[c]] = True
+    if probed is None and centroid_vecs is not None:
+        probed = {q: set(centroid_vecs) for q in q_ids}
+    cells = None
+    if probed is not None:
+        cells = sorted({c for cs in probed.values() for c in cs})
+        cl_index = {c: j for j, c in enumerate(cells)}
+        probe_mat = np.zeros((len(q_ids), len(cells)), dtype=bool)
+        for qi, q in enumerate(q_ids):
+            for c in probed.get(q, ()):
+                probe_mat[qi, cl_index[c]] = True
     offset_mat = None
     if centroid_vecs is not None:
-        missing = [c for c in union if c not in centroid_vecs]
+        missing = [c for c in cells if c not in centroid_vecs]
         if missing:
             raise ValueError(
-                "pq_candidates_batch: probe union clusters "
+                "pq_candidates_batch: probed clusters "
                 f"{missing} have no centroid vector — residual ADC "
                 "needs every probed cell's q·centroid offset"
             )
         cent_mat = np.stack(
             [
                 np.asarray(centroid_vecs[c], dtype=np.float64)
-                for c in union
+                for c in cells
             ]
         )  # (cells, d)
         q_mat = np.stack(
@@ -753,30 +661,32 @@ def pq_candidates_batch(
             C = np.frombuffer(b"".join(pdf["code"]), dtype=np.uint8).reshape(
                 len(pdf), m
             )
-            cl = pdf[cluster_col].map(cl_index).to_numpy()
-            known = cl == cl  # rows outside the union map to NaN
-            if not known.all():
-                pdf = pdf[known]
-                C = C[known]
-                cl = cl[known]
-                if not len(pdf):
-                    continue
-            cl = cl.astype(np.int64)
+            if cells is not None:
+                cl = pdf[cluster_col].map(cl_index).to_numpy()
+                known = cl == cl  # rows outside the cells map to NaN
+                if not known.all():
+                    pdf = pdf[known]
+                    C = C[known]
+                    cl = cl[known]
+                    if not len(pdf):
+                        continue
+                cl = cl.astype(np.int64)
             S = np.zeros((len(q_ids), len(pdf)))
             for j in range(m):
                 S += luts[:, j, C[:, j]]
             if offset_mat is not None:
                 S += offset_mat[:, cl]
             S = S.round(6)
-            allowed = probe_mat[:, cl]
             ids = pdf[id_col].to_numpy()
             outs = []
             for qi, q in enumerate(q_ids):
-                sel = np.flatnonzero(allowed[qi])
-                if not len(sel):
-                    continue
-                s_q = S[qi, sel]
-                ids_q = ids[sel]
+                if cells is None:
+                    s_q, ids_q = S[qi], ids
+                else:
+                    sel = np.flatnonzero(probe_mat[qi, cl])
+                    if not len(sel):
+                        continue
+                    s_q, ids_q = S[qi, sel], ids[sel]
                 keep = _local_topk_ties(s_q, ids_q, n_cand)
                 outs.append(
                     pd.DataFrame(
@@ -800,4 +710,43 @@ def pq_candidates_batch(
         local.withColumn("_r", F.row_number().over(w))
         .filter(F.col("_r") <= n_cand)
         .drop("_r")
+    )
+
+
+def ivfpq_candidates(
+    codes: DataFrame,
+    books: np.ndarray,
+    queries: list[tuple[int, list[float]]],
+    centroids: LocalCentroids,
+    nprobe: int,
+    n_cand: int = 100,
+    id_col: str = "vec_id",
+    cluster_col: str = "cluster",
+    residual: bool = False,
+) -> DataFrame:
+    """(query_id, id, adc_score) — the one IVF+PQ candidate stage, shared
+    by :func:`ivfpq_topk` and both compressed service lanes. Each query
+    is probed on the driver against the held ``centroids`` with
+    ``operators/ann.probe_local``, so no Spark job ranks a centroid; the
+    union of the probed cells prunes the code scan as a literal ``IN`` on
+    ``cluster_col`` (a static partition filter on a cluster-partitioned
+    code table); and
+    :func:`pq_candidates_batch` scores every query in one pass, each
+    masked to its own cells. ``residual=True`` (codes encoded over
+    :func:`residualize` output) adds each row's q·centroid offset, taken
+    from the same held vectors. Building the result runs no job."""
+    probes = probe_local(centroids, [v for _q, v in queries], nprobe)
+    union = sorted({c for cs in probes for c in cs})
+    cent_vecs = (
+        dict(zip(centroids.clusters, centroids.vectors)) if residual else None
+    )
+    return pq_candidates_batch(
+        codes.filter(F.col(cluster_col).isin(union)),
+        books,
+        queries,
+        {int(q): set(cs) for (q, _v), cs in zip(queries, probes)},
+        n_cand,
+        id_col,
+        cluster_col,
+        cent_vecs,
     )

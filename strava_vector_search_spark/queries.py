@@ -7056,7 +7056,11 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (b) every shared hit carries the identical similarity (the refine
     stage uses the same scorer)."""
     from strava_vector_search_spark.operators import pq as PQ
-    from strava_vector_search_spark.operators.ann import compute_centroids
+    from strava_vector_search_spark.operators.ann import (
+        collect_centroids,
+        compute_centroids,
+        probe_local,
+    )
 
     emb = load_table(spark, sf_dir, "embeddings")
     books = PQ.train_codebooks(emb)
@@ -7065,16 +7069,15 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n_encoded = codes.count()
     cents = compute_centroids(emb, "label").localCheckpoint(eager=False)
+    local = collect_centroids(cents)
     k, nprobe, qids = 10, 4, (3, 7, 11, 19, 23)
     hits, sims_exact = 0, True
     for qid in qids:
         qv = _query_vec(spark, sf_dir, qid)
-        # the SAME probe definition the operator uses internally — textual
-        # agreement is what makes "recall vs exact-within-probe" valid
-        probed = PQ.probe_clusters(cents, qv, nprobe)
-        in_probe = emb.join(
-            F.broadcast(probed), emb["label"] == probed["cluster"], "left_semi"
-        )
+        # the SAME probe the operator uses internally — agreement is what
+        # makes "recall vs exact-within-probe" valid
+        (probed,) = probe_local(local, [qv], nprobe)
+        in_probe = emb.filter(F.col("label").isin(probed))
         exact = {
             r["vec_id"]: r["similarity"]
             for r in S.brute_force_topk(
@@ -13919,9 +13922,14 @@ def ann_ivfpq_topk_768(spark: SparkSession, sf_dir: str) -> DataFrame:
     every shared hit carries the identical similarity (the refine stage
     is the same scorer). ``n_encoded`` anchors to the data."""
     from strava_vector_search_spark.operators import pq as PQ
+    from strava_vector_search_spark.operators.ann import (
+        collect_centroids,
+        probe_local,
+    )
 
     emb, cents, books, codes = _ivfpq_768_index(spark, sf_dir)
     n_encoded = codes.count()
+    local = collect_centroids(cents)
     k, nprobe, qids = 10, 4, (3, 7, 11, 19, 23)
     qvecs = {
         int(r["doc_id"]): [float(x) for x in r["embedding"]]
@@ -13935,12 +13943,8 @@ def ann_ivfpq_topk_768(spark: SparkSession, sf_dir: str) -> DataFrame:
     hits, sims_exact = 0, True
     for qid in qids:
         qv = qvecs[qid]
-        probed = PQ.probe_clusters(cents, qv, nprobe)
-        in_probe = emb.join(
-            F.broadcast(probed),
-            emb["cluster"] == probed["cluster"],
-            "left_semi",
-        )
+        (probed,) = probe_local(local, [qv], nprobe)
+        in_probe = emb.filter(F.col("cluster").isin(probed))
         exact = {
             r["doc_id"]: r["similarity"]
             for r in S.brute_force_topk(
@@ -14007,10 +14011,17 @@ def ann_ivfpq_persisted_768(spark: SparkSession, sf_dir: str) -> DataFrame:
     LOADED artifact, so a corrupt or stale artifact fails the gate, not
     just the build. Trained-vs-loaded value identity (parquet doubles
     round-trip exactly) is pinned in tests/test_pq.py."""
+    import os
+
     from strava_vector_search_spark.operators import pq as PQ
+    from strava_vector_search_spark.operators.ann import (
+        probe_local,
+        read_centroids_local,
+    )
 
     path = _pq768_path(spark, sf_dir)
     books, codes, cents, meta = PQ.load_pq_index(spark, path)
+    local = read_centroids_local(os.path.join(path, "centroids"))
     if meta["cluster_col"] != "cluster" or meta["id_col"] != "doc_id":
         raise ValueError(
             f"ann_ivfpq_persisted_768: foreign artifact at {path!r}: {meta}"
@@ -14037,12 +14048,8 @@ def ann_ivfpq_persisted_768(spark: SparkSession, sf_dir: str) -> DataFrame:
     hits, sims_exact = 0, True
     for qid in qids:
         qv = qvecs[qid]
-        probed = PQ.probe_clusters(cents, qv, nprobe)
-        in_probe = embc.join(
-            F.broadcast(probed),
-            embc["cluster"] == probed["cluster"],
-            "left_semi",
-        )
+        (probed,) = probe_local(local, [qv], nprobe)
+        in_probe = embc.filter(F.col("cluster").isin(probed))
         exact = {
             r["doc_id"]: r["similarity"]
             for r in S.brute_force_topk(
@@ -14736,9 +14743,11 @@ def ann_ivfpq_residual_768(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-describing the between-cell structure the coarse quantizer
     already captured. With inner-product scoring the decomposition is
     exact and the residual LUT stays cell-independent — ADC adds one
-    scalar q·centroid per probed cell (operators/pq._cell_offsets_scalar),
+    scalar q·centroid per probed cell (operators/pq.pq_candidates_batch),
     so the scan cost is unchanged: same 96 B/row, same one-LUT-per-query,
-    plus one gather-add.
+    plus one gather-add. Both lanes run the one candidate stage
+    (operators/pq.ivfpq_candidates) for all 5 queries in one pass, with
+    a budget covering every probed row.
 
     Budget-matched on the planted clustered corpus (m=96, kk=16 both
     lanes — :func:`_planted_residual_ivfpq_768`), nprobe=4, measured on
@@ -14757,6 +14766,10 @@ def ann_ivfpq_residual_768(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle pins the anchored corpus count and the contract constants,
     like the sibling ann_ivfpq gates."""
     from strava_vector_search_spark.operators import pq as PQ
+    from strava_vector_search_spark.operators.ann import (
+        collect_centroids,
+        probe_local,
+    )
 
     (
         clustered, cents, raw_books, raw_codes, res_books, res_codes,
@@ -14764,9 +14777,10 @@ def ann_ivfpq_residual_768(spark: SparkSession, sf_dir: str) -> DataFrame:
     from strava_vector_search_spark.operators.util import rebalance_for_kernel
 
     # the ADC kernel runs at the width its codes arrive with: spread the
-    # code scans once, before the per-query probe semi-joins
+    # code scans once, before the probe's cell filter
     raw_codes, res_codes = map(rebalance_for_kernel, (raw_codes, res_codes))
     n_corpus = clustered.count()
+    local = collect_centroids(cents)
     k, nprobe, qids = 10, 4, (3, 7, 11, 19, 23)
     qrows = (
         clustered.filter(F.col("doc_id").isin(*qids))
@@ -14780,41 +14794,39 @@ def ann_ivfpq_residual_768(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     import numpy as np
 
-    err_raw, err_res, hit_raw, hit_res = [], [], 0, 0
-    for qrow in qrows:
-        qv = [float(x) for x in qrow["embedding"]]
-        probed = PQ.probe_clusters(cents, qv, nprobe)
-        in_probe = clustered.join(
-            F.broadcast(probed), "cluster", "left_semi"
-        )
-        exact = {
+    queries = [
+        (int(r["doc_id"]), [float(x) for x in r["embedding"]]) for r in qrows
+    ]
+    exact = {}
+    for (q, qv), probed in zip(
+        queries, probe_local(local, [v for _q, v in queries], nprobe)
+    ):
+        exact[q] = {
             r["doc_id"]: float(np.dot(qv, r["embedding"]))
-            for r in in_probe.select("doc_id", "embedding").collect()
+            for r in clustered.filter(F.col("cluster").isin(probed))
+            .select("doc_id", "embedding")
+            .collect()
         }
-        centroid_vecs = {
-            r["cluster"]: r["centroid"]
-            for r in cents.join(
-                F.broadcast(probed), "cluster", "left_semi"
-            ).collect()
-        }
-        raw_adc = {
-            r["doc_id"]: r["adc_score"]
-            for r in PQ.pq_candidates(
-                raw_codes.join(F.broadcast(probed), "cluster", "left_semi"),
-                raw_books, qv, n_cand=len(exact), id_col="doc_id",
-            ).collect()
-        }
-        res_adc = {
-            r["doc_id"]: r["adc_score"]
-            for r in PQ.pq_candidates(
-                res_codes.join(F.broadcast(probed), "cluster", "left_semi"),
-                res_books, qv, n_cand=len(exact), id_col="doc_id",
-                centroid_vecs=centroid_vecs,
-            ).collect()
-        }
-        err_raw += [abs(raw_adc[i] - exact[i]) for i in exact]
-        err_res += [abs(res_adc[i] - exact[i]) for i in exact]
-        top_exact = set(sorted(exact, key=lambda i: (-exact[i], i))[:k])
+    # n_cand covers every probed row, so each lane scores all of them
+    n_cand = max(len(e) for e in exact.values())
+
+    def adc(codes, books, residual):
+        out = {q: {} for q in exact}
+        for r in PQ.ivfpq_candidates(
+            codes, books, queries, local, nprobe, n_cand, "doc_id",
+            "cluster", residual,
+        ).collect():
+            out[r["query_id"]][r["doc_id"]] = r["adc_score"]
+        return out
+
+    raw_all = adc(raw_codes, raw_books, False)
+    res_all = adc(res_codes, res_books, True)
+    err_raw, err_res, hit_raw, hit_res = [], [], 0, 0
+    for q, ex in exact.items():
+        raw_adc, res_adc = raw_all[q], res_all[q]
+        err_raw += [abs(raw_adc[i] - ex[i]) for i in ex]
+        err_res += [abs(res_adc[i] - ex[i]) for i in ex]
+        top_exact = set(sorted(ex, key=lambda i: (-ex[i], i))[:k])
         hit_raw += len(
             top_exact
             & set(sorted(raw_adc, key=lambda i: (-raw_adc[i], i))[:k])

@@ -25,8 +25,10 @@ filterable ATTRIBUTES + freshness lag) and queries it with a JSON request
                             table (one job per lookup)
   ``search_batch``          many requests, one pruned scan of the IVF layout
   ``search_approx``         single request, compressed: filter semi-join of
-                            the code table + ``operators/pq.ivfpq_topk``
-  ``search_approx_batch``   many requests, one ADC pass per distinct filter
+                            the code table, ``operators/pq.ivfpq_candidates``
+                            (driver probe + ADC kernel), exact rescore
+  ``search_approx_batch``   many requests, one ``ivfpq_candidates`` pass per
+                            distinct filter
   ========================  =================================================
 
   The single-request lanes return rows shaped like the reference's
@@ -295,8 +297,12 @@ class SearchService:
         a string, a ``query_vec`` whose length is not the service dim,
         or a limit below 1, is refused here: scoring zips the query
         against the stored vectors, so a short vector would otherwise
-        rank on NULL similarities."""
+        rank on NULL similarities. So is a ``columns`` value that is not
+        a list of strings or names a column the corpus lacks, in every
+        lane (the batch lanes return the service's columns whatever a
+        request names, but a bad name is still a bad request)."""
         attrs = set(self.attributes) if self.attributes else None
+        corpus_cols = None
         parsed: list[tuple[list[float] | None, int, dict]] = []
         missing: list[int] = []
         for i, req in enumerate(requests):
@@ -329,6 +335,23 @@ class SearchService:
                     f"request {i}: limit {limit} must be >= 1 (service "
                     f"dim {self.dim})"
                 )
+            cols = req.get("columns")
+            if cols is not None:
+                if not isinstance(cols, (list, tuple)) or not all(
+                    isinstance(c, str) for c in cols
+                ):
+                    raise ValueError(
+                        f"request {i}: columns must be a list of column "
+                        f"names, got {cols!r}"
+                    )
+                if corpus_cols is None:
+                    corpus_cols = self.corpus.columns
+                unknown = [c for c in cols if c not in corpus_cols]
+                if unknown:
+                    raise ValueError(
+                        f"request {i}: columns {unknown} are not corpus "
+                        f"columns {corpus_cols}"
+                    )
             parsed.append((qv, limit, req))
         if missing:
             raise ValueError(
@@ -395,13 +418,14 @@ class SearchService:
         rank window (filter-then-rank, same evaluation order as
         :meth:`search`), and per-request limits cut the ranked stream.
         Returns (request_id, id, attribute columns, cluster, similarity,
-        rank). It reads only the probed fraction of the index — the
-        scale path once the corpus dwarfs the query batch; at full probe
-        it equals sequential :meth:`search` calls. The layout's centroid
-        table is read at call time with no Spark job (a layout rebuilt
-        under the same path is picked up) and every request is probed on
-        the driver (``operators/ann.probe_local``), so building the
-        result runs one job: the layout's schema read."""
+        rank), the same columns for every request whatever a request's
+        ``columns`` names. It reads only the probed fraction of the
+        index — the scale path once the corpus dwarfs the query batch;
+        at full probe it equals sequential :meth:`search` calls. The
+        layout's centroid table is read at call time with no Spark job (a
+        layout rebuilt under the same path is picked up) and every
+        request is probed on the driver (``operators/ann.probe_local``),
+        so building the result runs one job: the layout's schema read."""
         import os
 
         from strava_vector_search_spark.operators.ann import (
@@ -469,12 +493,12 @@ class SearchService:
         (02:438-442) at the service layer: a fresh serving session
         LOADS codebooks + the 96-byte code table, it never retrains.
         The artifact's id column must match the service's; the coarse
-        centroid table must be present (search_approx probes it). The
-        centroid table is also held on the driver
-        (``operators/ann.read_centroids_local``, no Spark job), where
-        :meth:`search_approx_batch` probes it; the code table is spread
-        to cluster width here, once, so no query pays a job to check
-        its width."""
+        centroid table must be present. It is held on the driver
+        (``operators/ann.read_centroids_local``, no Spark job), where both
+        compressed lanes probe it and take residual offsets from it; the
+        code table is spread to cluster width here, once, so no query
+        pays a job to check its width. ``pq_index`` is (codebooks, code
+        table, driver-side centroids, meta)."""
         import os
 
         from strava_vector_search_spark.operators import pq as PQ
@@ -508,16 +532,14 @@ class SearchService:
         self.pq_index = (
             books,
             rebalance_for_kernel(codes).localCheckpoint(eager=False),
-            cents.localCheckpoint(eager=False),
-            meta,
             read_centroids_local(os.path.join(path, "centroids")),
+            meta,
         )
         return self
 
     def _attached_pq(self, lane: str) -> tuple:
-        """(books, codes, centroids, meta, driver-side centroids) of the
-        attached artifact, once the approximate lanes' preconditions
-        hold."""
+        """(books, codes, driver-side centroids, meta) of the attached
+        artifact, once the approximate lanes' preconditions hold."""
         if self.pq_index is None:
             raise RuntimeError(
                 f"no PQ index: call attach_pq_index() before {lane}()"
@@ -534,34 +556,42 @@ class SearchService:
         """Serve one JSON request through the COMPRESSED index: metadata
         filters first (02:406 — the DSL predicate runs on the narrow
         corpus scan and semi-joins the code table, so filtered-out rows
-        never enter ADC and never consume candidate slots), then
-        :func:`operators.pq.ivfpq_topk` over the loaded artifact (probe
-        the coarse centroids, ADC-scan the probed codes, exact-rescore
-        ``n_cand`` candidates against the stored embeddings), returned in
-        :meth:`search`'s wire shape. The approximation is candidate
-        recall only — shared hits carry similarities identical to
-        :meth:`search`'s (same scorer on the same stored vectors)."""
+        never enter ADC and never consume candidate slots), then the
+        candidate stage every compressed lane shares
+        (:func:`operators.pq.ivfpq_candidates`: the request probed on the
+        driver against the held centroids, the probed cells' codes
+        ADC-scanned), then an exact rescore of the ``n_cand`` candidates
+        against the stored embeddings (a top-k heap), returned in
+        :meth:`search`'s wire shape. Building the result runs no Spark
+        job. The approximation is candidate recall only — shared hits
+        carry similarities identical to :meth:`search`'s (same scorer on
+        the same stored vectors)."""
         from strava_vector_search_spark.operators import pq as PQ
 
-        books, codes, cents, meta, _local = self._attached_pq("search_approx")
+        books, codes, cents, meta = self._attached_pq("search_approx")
         qv, limit, pred, columns = self._parse_one(request)
         if pred is not None:
             keep_ids = self.corpus.filter(pred).select(self.id_col)
             # semi-join, planner-chosen strategy: the qualifying-id side
             # can be any size, so no forced broadcast
             codes = codes.join(keep_ids, self.id_col, "left_semi")
-        top = PQ.ivfpq_topk(
-            emb=self.embeddings,
-            codes=codes,
-            books=books,
-            query_vec=qv,
-            k=limit,
-            nprobe=nprobe,
-            n_cand=n_cand,
-            cluster_col=meta["cluster_col"],
+        cand = PQ.ivfpq_candidates(
+            codes,
+            books,
+            [(0, qv)],
+            cents,
+            nprobe,
+            n_cand,
+            self.id_col,
+            meta["cluster_col"],
+            bool(meta.get("residual")),
+        )
+        top = PQ.rescore_candidates(
+            self.embeddings,
+            cand,
+            qv,
+            limit,
             id_col=self.id_col,
-            centroids=cents,
-            residual=bool(meta.get("residual")),
             assume_normalized=self.assume_normalized,
         )
         return self._wire_shape(top.join(self.corpus, self.id_col), columns)
@@ -581,34 +611,29 @@ class SearchService:
         cache-refresh shape once the corpus outgrows even the pruned
         full-vector scan). Request-for-request it returns EXACTLY what
         sequential :meth:`search_approx` calls return (pinned in
-        pytest): per-request filters run on the narrow corpus scan and
-        semi-join the code table BEFORE ADC, so filtered-out rows never
-        consume candidate slots; each request's candidates come only
-        from ITS probed clusters (the mask rides inside the Arrow
-        kernel); the exact rescore scores only (request, candidate)
-        pairs, never another request's finds.
+        pytest): both take their candidates from
+        :func:`operators.pq.ivfpq_candidates`; per-request filters run on
+        the narrow corpus scan and semi-join the code table BEFORE ADC,
+        so filtered-out rows never consume candidate slots; each
+        request's candidates come only from ITS probed clusters (the
+        mask rides inside the Arrow kernel); the exact rescore scores
+        only (request, candidate) pairs, never another request's finds.
 
         One ADC scan serves every request that shares a filter body —
         expression and job growth are bounded by DISTINCT filters (the
         :meth:`search_batch` contract), and requests are grouped, so a
         10^4-request refresh with a handful of filter shapes costs a
         handful of passes over the 96 B/row code table. Returns
-        (request_id, id, corpus columns, similarity, rank).
-
-        Every request is probed on the driver against the centroids held
-        by :meth:`attach_pq_index` (``operators/ann.probe_local``, the
-        rule of the single-request lane's distributed probe), and the
-        residual offsets use the same held vectors, so building the
-        result runs no Spark job."""
+        (request_id, id, corpus columns, similarity, rank): the
+        service's columns for every request, whatever a request's
+        ``columns`` names. Every request is probed on the driver, so
+        building the result runs no Spark job."""
         from strava_vector_search_spark.functions.vector import (
             similarity,
         )
         from strava_vector_search_spark.operators import pq as PQ
-        from strava_vector_search_spark.operators.ann import probe_local
 
-        books, codes, _cents, meta, local = self._attached_pq(
-            "search_approx_batch"
-        )
+        books, codes, cents, meta = self._attached_pq("search_approx_batch")
         if not requests:
             raise ValueError("search_approx_batch: empty request list")
         rows, compiled, _columns = self._parse_requests(
@@ -616,37 +641,23 @@ class SearchService:
         )
         cand_parts = []
         for fid in sorted({r[3] for r in rows}):
-            group = [r for r in rows if r[3] == fid]
             gcodes = codes
             if fid >= 0:
                 keep_ids = self.corpus.filter(compiled[fid]).select(
                     self.id_col
                 )
                 gcodes = codes.join(keep_ids, self.id_col, "left_semi")
-            probed = {
-                i: set(cs)
-                for (i, *_), cs in zip(
-                    group, probe_local(local, [r[1] for r in group], nprobe)
-                )
-            }
-            union = sorted({c for cs in probed.values() for c in cs})
-            # residual-stamped artifact (IVFADC): the batch kernel adds
-            # the (Q × cells) q·centroid matrix
-            centroid_vecs = None
-            if meta.get("residual"):
-                centroid_vecs = dict(zip(local.clusters, local.vectors))
             cand_parts.append(
-                PQ.pq_candidates_batch(
-                    gcodes.filter(
-                        F.col(meta["cluster_col"]).isin(union)
-                    ),
+                PQ.ivfpq_candidates(
+                    gcodes,
                     books,
-                    [(i, qv) for i, qv, _l, _f in group],
-                    probed,
-                    n_cand=n_cand,
-                    id_col=self.id_col,
-                    cluster_col=meta["cluster_col"],
-                    centroid_vecs=centroid_vecs,
+                    [(i, qv) for i, qv, _l, f in rows if f == fid],
+                    cents,
+                    nprobe,
+                    n_cand,
+                    self.id_col,
+                    meta["cluster_col"],
+                    bool(meta.get("residual")),
                 )
             )
         cand = reduce(lambda a, b: a.unionByName(b), cand_parts).select(

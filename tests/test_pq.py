@@ -22,6 +22,18 @@ def books(emb):
     return PQ.train_codebooks(emb)
 
 
+def _probed_ref(spark, cents, qv, nprobe):
+    """(cluster) of the query's probed cells by the distributed reference
+    probe, ``rank_probed_clusters``: the lanes probe on the driver, so
+    the reference is a rule they do not share code with."""
+    from strava_vector_search_spark.operators.ann import rank_probed_clusters
+
+    queries = spark.createDataFrame(
+        [(0, qv)], "query_id bigint, query_vec array<double>"
+    )
+    return rank_probed_clusters(cents, queries, nprobe).select("cluster")
+
+
 def test_training_is_deterministic(emb, books):
     # the memo would make a same-plan retrain vacuously identical — call
     # the uncached trainer so Lloyd's determinism itself stays pinned
@@ -85,7 +97,9 @@ def test_string_ids_roundtrip(spark, emb, books):
         float(x)
         for x in emb.filter(F.col("vec_id") == 3).head()["embedding"]
     ]
-    cand = PQ.pq_candidates(codes, books, qv, n_cand=5, id_col="sid")
+    cand = PQ.pq_candidates_batch(
+        codes, books, [(0, qv)], None, n_cand=5, id_col="sid"
+    )
     rows = cand.collect()
     assert len(rows) == 5 and all(r["sid"].startswith("doc-") for r in rows)
 
@@ -109,7 +123,7 @@ def test_ivfpq_equals_pq_within_probed_clusters(spark, emb, books):
     cents = compute_centroids(emb, "label").localCheckpoint()
     qv = [float(x) for x in emb.filter(F.col("vec_id") == 3).head()["embedding"]]
     nprobe = 3
-    probed = PQ.probe_clusters(cents, qv, nprobe)
+    probed = _probed_ref(spark, cents, qv, nprobe)
     in_probe = emb.join(
         F.broadcast(probed), emb["label"] == probed["cluster"], "left_semi"
     )
@@ -129,7 +143,7 @@ def test_ivfpq_equals_pq_within_probed_clusters(spark, emb, books):
 
 def test_ivfpq_kernel_runs_at_cluster_width(spark):
     """ivfpq_topk checks the ADC kernel's width on the code scan, before
-    the probe's semi-join: a one-partition code table of >= 2048 rows is
+    the probe's cell filter: a one-partition code table of >= 2048 rows is
     spread round-robin ahead of the kernel."""
     import numpy as np
 
@@ -336,8 +350,9 @@ def test_residual_adc_is_exact_when_residuals_vanish(spark):
     }
     got = {
         r["vec_id"]: r["adc_score"]
-        for r in PQ.pq_candidates(
-            codes, books, qv, n_cand=40, centroid_vecs=centroid_vecs
+        for r in PQ.pq_candidates_batch(
+            codes, books, [(0, qv)], None, n_cand=40,
+            centroid_vecs=centroid_vecs,
         ).collect()
     }
     for r in corpus.collect():
@@ -374,7 +389,7 @@ def test_residual_beats_raw_on_clustered_geometry(spark, planted):
                 "embedding"
             ]
         ]
-        probed = PQ.probe_clusters(cents, qv, nprobe)
+        probed = _probed_ref(spark, cents, qv, nprobe)
         in_probe = corpus.join(
             F.broadcast(probed), "cluster", "left_semi"
         ).localCheckpoint()
@@ -390,20 +405,22 @@ def test_residual_beats_raw_on_clustered_geometry(spark, planted):
         }
         raw_adc = {
             r["vec_id"]: r["adc_score"]
-            for r in PQ.pq_candidates(
+            for r in PQ.pq_candidates_batch(
                 raw_codes.join(F.broadcast(probed), "cluster", "left_semi"),
                 raw_books,
-                qv,
+                [(0, qv)],
+                None,
                 n_cand=len(exact),
                 id_col="vec_id",
             ).collect()
         }
         res_adc = {
             r["vec_id"]: r["adc_score"]
-            for r in PQ.pq_candidates(
+            for r in PQ.pq_candidates_batch(
                 res_codes.join(F.broadcast(probed), "cluster", "left_semi"),
                 res_books,
-                qv,
+                [(0, qv)],
+                None,
                 n_cand=len(exact),
                 id_col="vec_id",
                 centroid_vecs=centroid_vecs,
@@ -477,7 +494,7 @@ def test_residual_artifact_roundtrip_and_service(spark, planted, tmp_path):
         (r["vec_id"], r["similarity"], r["rank"])
         for r in svc.search_approx(req, nprobe=3, n_cand=240).collect()
     ]
-    probed = PQ.probe_clusters(cents, qv, 3)
+    probed = _probed_ref(spark, cents, qv, 3)
     in_probe = corpus.join(F.broadcast(probed), "cluster", "left_semi")
     want = [
         (r["vec_id"], r["similarity"], i + 1)

@@ -622,11 +622,12 @@ class TestSearchApproxPQ:
 
 
 class TestDriverProbe:
-    """Both batch lanes probe on the driver; these pin them to the
-    distributed probe at nprobe < cells. The IVF cells are an attribute
-    (no KMeans) and cells 1 and 2 hold the same texts, so their
-    centroids are equal and tie on every query: at nprobe 1 a run query
-    must probe cell 1, and probing cell 2 returns other doc ids."""
+    """Every IVF serving lane probes on the driver; these pin the lanes to
+    the distributed probe (``rank_probed_clusters``) at nprobe < cells.
+    The IVF cells are an attribute (no KMeans) and cells 1 and 2 hold the
+    same texts, so their centroids are equal and tie on every query: at
+    nprobe 1 a run query must probe cell 1, and probing cell 2 returns
+    other doc ids."""
 
     TEXTS = {
         0: ["endurance ride", "gravel ride climbs", "criterium race ride"],
@@ -777,8 +778,9 @@ class TestDriverProbe:
     def test_approx_batch_equals_sequential_approx_below_full_probe(
         self, pq_services, residual
     ):
-        """search_approx keeps the distributed probe; the batch lane
-        probes on the driver and must return the same rows."""
+        """Both compressed lanes share one candidate stage; the batch
+        lane must return the rows of sequential search_approx calls (the
+        probe itself is pinned to an independent reference below)."""
         svc = pq_services[residual]
         assert svc.pq_index[3]["residual"] is residual
         got = self._by_request(
@@ -789,6 +791,54 @@ class TestDriverProbe:
         assert got == self._by_request(
             [svc.search_approx(r, nprobe=1, n_cand=20) for r in self.REQUESTS]
         )
+
+    @pytest.mark.parametrize("residual", [False, True])
+    def test_search_approx_equals_exact_search_within_probed_cells(
+        self, cell_svc, pq_services, residual
+    ):
+        """With n_cand above the rows of the probed cells, search_approx
+        loses no candidate, so it must equal exact search restricted to
+        the cells the distributed probe picks (``_cell_order``): a check
+        on the driver probe and the ADC stage that shares no code with
+        them."""
+        svc, _root = cell_svc
+        approx = pq_services[residual]
+        order = self._cell_order(svc)
+        for nprobe in (1, 3):
+            want, got = [], []
+            for i, req in enumerate(self.REQUESTS):
+                cells = {"@in": {"cell": order[i][:nprobe]}}
+                flt = req.get("filter")
+                want.append(svc.search(
+                    {**req, "filter": {"@and": [flt, cells]} if flt else cells}
+                ))
+                got.append(approx.search_approx(req, nprobe=nprobe, n_cand=20))
+            assert self._by_request(got) == self._by_request(want), nprobe
+
+    def test_bad_columns_fail_in_the_front_end(self, cell_svc, pq_services):
+        """Every lane refuses a ``columns`` value that is not a list of
+        strings, or that names a column the corpus lacks, before any plan
+        is built, naming the request and the offending value."""
+        svc, _root = cell_svc
+        approx = pq_services[False]
+        good = self.REQUESTS[0]
+        lanes = (
+            (0, svc.search),
+            (0, approx.search_approx),
+            (1, lambda r: svc.search_batch([good, r])),
+            (1, lambda r: approx.search_approx_batch([good, r])),
+        )
+        for columns, name in (
+            (["text", "nope"], "nope"),
+            ("text", "text"),
+            (["text", 3], "3"),
+        ):
+            for i, lane in lanes:
+                with pytest.raises(ValueError, match=f"request {i}: .*{name}"):
+                    lane({**good, "columns": columns})
+        # valid names pass every lane
+        for _i, lane in lanes:
+            lane({**good, "columns": ["text", "cell"]})
 
     def test_batch_lanes_plan_without_probe_jobs(
         self, spark, cell_svc, pq_services
@@ -819,17 +869,22 @@ class TestDriverProbe:
             sc.setLocalProperty("spark.job.description", None)
 
     def test_search_approx_plans_without_jobs(self, spark, pq_services):
-        """Building a raw-artifact search_approx result runs no job: the
+        """Building a search_approx result runs no job, on a raw and a
+        residual artifact, unfiltered and filtered: the request is probed
+        on the driver, the offsets come from the held centroids, and the
         kernel's width is checked on the attached code table (spread at
-        attach), not on the probe's semi-join."""
+        attach), not on the filter's semi-join."""
         sc = spark.sparkContext
-        group = "test_search_approx_plans_without_jobs"
-        sc.setJobGroup(group, "single-request approximate planning")
         try:
-            df = pq_services[False].search_approx(self.REQUESTS[0], nprobe=2)
-            assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
-            assert len(df.collect()) == self.REQUESTS[0]["limit"]
-            assert list(sc.statusTracker().getJobIdsForGroup(group)) != []
+            for residual in (False, True):
+                for req in self.REQUESTS[:2]:
+                    group = f"search_approx_plan_{residual}_{'filter' in req}"
+                    sc.setJobGroup(group, "search_approx planning")
+                    df = pq_services[residual].search_approx(req, nprobe=2)
+                    jobs = sc.statusTracker().getJobIdsForGroup
+                    assert list(jobs(group)) == [], (group, list(jobs(group)))
+                    assert len(df.collect()) == req["limit"]
+                    assert list(jobs(group)) != []
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
             sc.setLocalProperty("spark.job.description", None)

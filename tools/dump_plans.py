@@ -52,7 +52,9 @@ EXPECTATIONS: dict[str, dict] = {
     },
     "vs_batch_topk": {"broadcast_join": "BroadcastNestedLoopJoin"},
     "ann_ivf_topk": {
-        "broadcast_join": "BroadcastHashJoin",
+        # the driver-probed cells reach the parquet scan as a pushed IN
+        # (no join left to broadcast); top-10 is a heap
+        "pushed_probe": r"PushedFilters: \[.*In\(label",
         "top_k_no_sort": "TakeOrderedAndProject",
     },
     "q1_pricing_summary": {
@@ -479,9 +481,10 @@ EXPECTATIONS: dict[str, dict] = {
     # (strava_vector_search_spark/benchmarks.py) that main() substitutes —
     # the same callables bench.py times (VERDICT r02 item 5).
     "ann_ivfpq_topk": {
-        # IVF prune = broadcast semi-join of probed clusters; ADC scan is
-        # the one Python kernel; candidate rescore joins back by broadcast;
-        # final top-k never globally sorts; nothing cartesian, ever
+        # IVF prune = literal IN of the driver-probed cells on the code
+        # scan; ADC scan is the one Python kernel; candidate rescore joins
+        # back by broadcast; final top-k never globally sorts; nothing
+        # cartesian, ever
         "python_kernel": "MapInPandas",
         "broadcast_join": "BroadcastHashJoin",
         "top_k_no_sort": "TakeOrderedAndProject",
@@ -591,18 +594,20 @@ EXPECTATIONS: dict[str, dict] = {
     },
     # -- round 5 ------------------------------------------------------------
     "ann_ivf_topk_768": {
-        # 768-d IVF: partial-combined embedding + centroid aggregates,
-        # left-semi candidate filter, top-10 as a heap — never a
-        # cartesian, never a global sort, no Python
-        "partial_agg": "partial_",
+        # 768-d IVF: the centroid aggregate runs in the collect before
+        # the query is planned; the candidate filter is a literal IN of
+        # the driver-probed cells, top-10 as a heap — never a cartesian,
+        # never a global sort, no Python
+        "probe_in_list": r"lang#\d+ IN \(",
         "top_k_no_sort": "TakeOrderedAndProject",
         "no_cartesian": "!CartesianProduct",
         "no_python": "!BatchEvalPython",
     },
     "ann_ivfpq_topk_768": {
         # composed IVF+PQ at production width (lean twin): probed-code
-        # ADC scan is the Arrow kernel, probe/candidate joins broadcast,
-        # exact rescore top-k as a heap over the checkpointed index
+        # ADC scan is the Arrow kernel, the probe is a literal IN of the
+        # driver-probed cells, the candidate join broadcasts, exact
+        # rescore top-k as a heap over the checkpointed index
         "python_kernel": "MapInPandas",
         "broadcast_join": "BroadcastHashJoin",
         "top_k_no_sort": "TakeOrderedAndProject",
@@ -730,8 +735,10 @@ EXPECTATIONS: dict[str, dict] = {
     "svc_search_approx_768": {
         # service approximate serve (lean twin: attach persisted IVF+PQ,
         # one filtered search_approx): metadata filter semi-joins the
-        # code table BEFORE the ADC kernel (MapInPandas), candidate and
-        # rescore joins broadcast, top-k is a heap, never a cartesian
+        # code table BEFORE the ADC kernel (MapInPandas), the IVF prune is
+        # a literal IN of the driver-probed cells on the code scan,
+        # candidate and rescore joins broadcast, top-k is a heap, never a
+        # cartesian
         "python_kernel": "MapInPandas",
         "broadcast_join": "BroadcastHashJoin",
         "top_k_no_sort": "TakeOrderedAndProject",
