@@ -103,3 +103,16 @@ def test_sweep_stops_at_a_lost_jvm(cc, sf_dir, tmp_path, monkeypatch, capsys):
     for g in ("g3", "g4", "g5"):
         assert res["results"][g]["hash_match"] is False
         assert res["results"][g]["err"].startswith("not run: Spark JVM lost")
+
+
+def test_artifact_is_named_after_the_sf_dir(cc):
+    """A full sweep's default artifact is one file per sf dir, so an
+    sf0.001 sweep cannot overwrite the sf0.01 evidence."""
+    snaps = os.path.join(os.path.dirname(_TOOL), "correctness_snapshots")
+    assert cc.artifact_path("/data/sf0.01") == os.path.join(
+        snaps, "full_run_sf001.json"
+    )
+    assert cc.artifact_path("/data/sf0.001/") == os.path.join(
+        snaps, "full_run_sf0001.json"
+    )
+    assert cc.artifact_path("sf1") == os.path.join(snaps, "full_run_sf1.json")

@@ -13,8 +13,10 @@ run as a failure (exit status 1).
 
 Besides the per-gate stdout lines, every full (no-subset) run writes a
 machine-readable artifact in the driver's CORRECTNESS_r{N}.json shape to
-tools/correctness_snapshots/full_run.json (override: $CHECK_JSON_OUT) so
-a complete-gate run can be committed as round evidence (ADVICE r03 item 3).
+tools/correctness_snapshots/full_run_<sf>.json, named after the sf dir
+(``full_run_sf001.json`` for sf0.01, ``full_run_sf0001.json`` for
+sf0.001; override: $CHECK_JSON_OUT), so a complete-gate run at one SF
+never overwrites another SF's committed evidence (ADVICE r03 item 3).
 """
 
 from __future__ import annotations
@@ -32,6 +34,17 @@ import __spark_entry__ as entrymod
 from strava_vector_search_spark.session import get_spark
 
 SF_DIR = os.environ.get("SF_DIR", "/root/testdata/sf0.01")
+
+
+def artifact_path(sf_dir: str) -> str:
+    """Default artifact of a full sweep over ``sf_dir``: one file per sf
+    dir, named after its basename without dots."""
+    name = os.path.basename(sf_dir.rstrip("/")).replace(".", "")
+    return os.path.join(
+        os.path.dirname(os.path.abspath(__file__)),
+        "correctness_snapshots",
+        f"full_run_{name}.json",
+    )
 
 
 def _norm(v):
@@ -170,11 +183,7 @@ def main() -> int:
     if not only:
         import json
 
-        out_path = os.environ.get(
-            "CHECK_JSON_OUT",
-            os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                         "correctness_snapshots", "full_run.json"),
-        )
+        out_path = os.environ.get("CHECK_JSON_OUT", artifact_path(SF_DIR))
         try:
             os.makedirs(os.path.dirname(out_path), exist_ok=True)
             # context: free-form provenance for the snapshot (e.g. "full
