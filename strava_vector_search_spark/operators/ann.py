@@ -79,19 +79,23 @@ def ivf_topk(
     cluster_col: str = "label",
     vector_col: str = "embedding",
     id_col: str = "vec_id",
-    centroids: DataFrame | None = None,
+    centroids: LocalCentroids | None = None,
 ) -> DataFrame:
     """IVF search: probe the nprobe nearest clusters, brute-force inside.
 
-    The centroid table (k rows) is collected once and the query probed
-    on the driver (:func:`probe_local`); the candidate scan is a literal
-    ``IN`` on the cluster column — a static partition filter when the
-    table is written partitioned by it. Ties in centroid distance break
-    by cluster id; final top-k ties break by vector id.
+    The query is probed on the driver (:func:`probe_local`) against the
+    held ``centroids`` (None: :func:`compute_centroids` of ``emb``,
+    collected here); the candidate scan is a literal ``IN`` on the
+    cluster column — a static partition filter when the table is
+    written partitioned by it. Building the result from held centroids
+    runs no job. Ties in centroid distance break by cluster id; final
+    top-k ties break by vector id.
     """
     if centroids is None:
-        centroids = compute_centroids(emb, cluster_col, vector_col)
-    (probed,) = probe_local(collect_centroids(centroids), [query_vec], nprobe)
+        centroids = collect_centroids(
+            compute_centroids(emb, cluster_col, vector_col)
+        )
+    (probed,) = probe_local(centroids, [query_vec], nprobe)
     return brute_force_topk(
         emb.filter(F.col(cluster_col).isin(probed)),
         query_vec,

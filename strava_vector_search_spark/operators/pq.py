@@ -511,7 +511,7 @@ def ivfpq_topk(
     cluster_col: str = "label",
     vector_col: str = "embedding",
     id_col: str = "vec_id",
-    centroids: DataFrame | None = None,
+    centroids: LocalCentroids | None = None,
     residual: bool = False,
     assume_normalized: bool = True,
 ) -> DataFrame:
@@ -523,10 +523,10 @@ def ivfpq_topk(
     surviving candidates (:func:`rescore_candidates`).
 
     ``codes`` must carry ``cluster_col`` (encode with
-    ``encode_pq(..., keep_cols=(cluster_col,))``). The centroid table
-    (``compute_centroids`` of ``emb`` when None) is collected once, and
-    the candidates come from :func:`ivfpq_candidates`, the stage the
-    service lanes share.
+    ``encode_pq(..., keep_cols=(cluster_col,))``). ``centroids`` are held
+    on the driver (None: ``compute_centroids`` of ``emb``, collected
+    here), and the candidates come from :func:`ivfpq_candidates`, the
+    stage the service lanes share.
 
     ``residual=True``: the codes were encoded over
     :func:`residualize` output (true IVFADC) — ADC adds each probed
@@ -542,12 +542,14 @@ def ivfpq_topk(
     from strava_vector_search_spark.operators.util import rebalance_for_kernel
 
     if centroids is None:
-        centroids = compute_centroids(emb, cluster_col, vector_col)
+        centroids = collect_centroids(
+            compute_centroids(emb, cluster_col, vector_col)
+        )
     cand = ivfpq_candidates(
         rebalance_for_kernel(codes),
         books,
         [(0, query_vec)],
-        collect_centroids(centroids),
+        centroids,
         nprobe,
         n_cand,
         id_col,

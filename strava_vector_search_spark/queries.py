@@ -1100,6 +1100,7 @@ def ann_kmeans_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     nprobe=5 of 8 clusters). Probing all 8 clusters doubles as the
     brute-force baseline so both sides share one scorer."""
     from strava_vector_search_spark.operators.ann import (
+        collect_centroids,
         compute_centroids,
         ivf_topk,
         kmeans_assign,
@@ -1113,6 +1114,7 @@ def ann_kmeans_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         eager=False
     )
     cents = compute_centroids(clustered, "cluster").localCheckpoint(eager=False)
+    local = collect_centroids(cents)
     k, nprobe, qids = 10, 5, (3, 7, 11, 19, 23)
     hits = 0
     subset_exact = True
@@ -1120,17 +1122,17 @@ def ann_kmeans_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         qv = _query_vec(spark, sf_dir, qid)
         qcol = lit_double_array(qv)
 
-        def run(df, cen, probe_n):
+        def run(df, probe_n):
             return [
                 (r["vec_id"], r["similarity"])
                 for r in ivf_topk(
                     df, qv, k=k, nprobe=probe_n, cluster_col="cluster",
-                    id_col="vec_id", centroids=cen,
+                    id_col="vec_id", centroids=local,
                 ).select("vec_id", "similarity").collect()
             ]
 
-        ivf = run(clustered, cents, nprobe)
-        full = run(clustered, cents, 8)  # all clusters == brute force
+        ivf = run(clustered, nprobe)
+        full = run(clustered, 8)  # all clusters == brute force
         hits += len({i for i, _ in ivf} & {i for i, _ in full})
         probed = [
             r["cluster"]
@@ -1141,9 +1143,7 @@ def ann_kmeans_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             .limit(nprobe)
             .collect()
         ]
-        sub = run(
-            clustered.filter(F.col("cluster").isin(probed)), cents, nprobe
-        )
+        sub = run(clustered.filter(F.col("cluster").isin(probed)), nprobe)
         subset_exact = subset_exact and (ivf == sub)
     mean_recall = hits / (k * len(qids))
     return spark.createDataFrame(
@@ -4247,13 +4247,14 @@ def ann_ivf_topk_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster-partitioned + lang-bucketed layout both predicates prune at
     the parquet reader. Exact oracle (IVF here is deterministic)."""
     from strava_vector_search_spark.operators.ann import (
+        collect_centroids,
         compute_centroids,
         ivf_topk,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
     docs = load_table(spark, sf_dir, "documents")
-    cents = compute_centroids(emb, "label", "embedding")
+    cents = collect_centroids(compute_centroids(emb, "label", "embedding"))
     corpus = emb.join(
         docs.select("doc_id", "lang"),
         emb["vec_id"] == F.col("doc_id"),
@@ -7088,7 +7089,7 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             r["vec_id"]: r["similarity"]
             for r in PQ.ivfpq_topk(
                 emb, codes, books, qv, k=k, nprobe=nprobe, n_cand=200,
-                centroids=cents,
+                centroids=local,
             ).collect()
         }
         common = set(exact) & set(approx)
@@ -12777,6 +12778,7 @@ def vs_ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     (partition-pruned under the ann_ivf_partition_pruned layout) and the
     exact arm is the one full scan."""
     from strava_vector_search_spark.operators.ann import (
+        collect_centroids,
         compute_centroids,
         ivf_topk,
     )
@@ -12787,7 +12789,7 @@ def vs_ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact_ids = brute_force_topk(
         emb.filter(F.col("embedding").isNotNull()), qv, k=10, id_col="vec_id"
     ).select("vec_id").localCheckpoint(eager=False)
-    cents = compute_centroids(emb).localCheckpoint(eager=False)
+    cents = collect_centroids(compute_centroids(emb))
     arms = []
     for nprobe in (1, 2, 4):
         hits = (
@@ -13963,7 +13965,7 @@ def ann_ivfpq_topk_768(spark: SparkSession, sf_dir: str) -> DataFrame:
                 n_cand=200,
                 cluster_col="cluster",
                 id_col="doc_id",
-                centroids=cents,
+                centroids=local,
             ).collect()
         }
         common = set(exact) & set(approx)
@@ -14020,7 +14022,7 @@ def ann_ivfpq_persisted_768(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     path = _pq768_path(spark, sf_dir)
-    books, codes, cents, meta = PQ.load_pq_index(spark, path)
+    books, codes, _cents, meta = PQ.load_pq_index(spark, path)
     local = read_centroids_local(os.path.join(path, "centroids"))
     if meta["cluster_col"] != "cluster" or meta["id_col"] != "doc_id":
         raise ValueError(
@@ -14068,7 +14070,7 @@ def ann_ivfpq_persisted_768(spark: SparkSession, sf_dir: str) -> DataFrame:
                 n_cand=200,
                 cluster_col="cluster",
                 id_col="doc_id",
-                centroids=cents,
+                centroids=local,
             ).collect()
         }
         common = set(exact) & set(approx)

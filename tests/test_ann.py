@@ -29,7 +29,9 @@ def test_ivf_equals_brute_force_on_probed_clusters(emb, qvec):
     # labels are random (not similarity clusters), so IVF's guarantee here is
     # functional: its result == brute force restricted to the probed clusters
     cents = A.compute_centroids(emb)
-    out = A.ivf_topk(emb, qvec, k=10, nprobe=3, centroids=cents).collect()
+    out = A.ivf_topk(
+        emb, qvec, k=10, nprobe=3, centroids=A.collect_centroids(cents)
+    ).collect()
     assert len(out) == 10
     from strava_vector_search_spark.functions.vector import cosine_similarity_rounded
 
@@ -71,7 +73,8 @@ def test_ivf_batch_topk_matches_per_query_ivf(spark, emb):
     }
     for q in qids:
         single = A.ivf_topk(
-            emb, qvecs[q], k=5, nprobe=3, centroids=cents
+            emb, qvecs[q], k=5, nprobe=3,
+            centroids=A.collect_centroids(cents),
         ).collect()
         for rank, r in enumerate(single, start=1):
             assert batch[(q, rank)] == (r["vec_id"], r["similarity"])
@@ -115,7 +118,8 @@ def test_ivf_batch_topk_randomized_parity(spark):
         for r in queries.collect():
             q = r["query_id"]
             single = A.ivf_topk(
-                emb, list(r["query_vec"]), k=7, nprobe=2, centroids=cents
+                emb, list(r["query_vec"]), k=7, nprobe=2,
+                centroids=A.collect_centroids(cents),
             ).collect()
             n_expected += len(single)
             for rank, s in enumerate(single, start=1):
@@ -277,6 +281,38 @@ def test_read_centroids_local_runs_no_job(spark, tmp_path):
         sc.setLocalProperty("spark.job.description", None)
     assert got.clusters == [1, 3]
     assert np.array_equal(got.vectors, [[2.0, 0.125], [0.5, -1.25]])
+
+
+def test_per_query_ivf_lanes_plan_without_jobs(spark, emb, qvec):
+    """ivf_topk and ivfpq_topk probe against centroids the caller holds:
+    building either result DataFrame starts no Spark job, so a gate that
+    collects its centroids once pays no collect per query."""
+    from strava_vector_search_spark.operators import pq as PQ
+
+    local = A.collect_centroids(A.compute_centroids(emb))
+    books = PQ.train_codebooks(emb)
+    # spread before the group, as an attached index is: the kernel's width
+    # check then needs no count
+    codes = (
+        PQ.encode_pq(emb, books, keep_cols=("label",))
+        .repartition(spark.sparkContext.defaultParallelism)
+        .localCheckpoint()
+    )
+    sc = spark.sparkContext
+    group = "test_per_query_ivf_lanes_plan_without_jobs"
+    sc.setJobGroup(group, "per-query IVF planning")
+    try:
+        ivf = A.ivf_topk(emb, qvec, k=10, nprobe=3, centroids=local)
+        ivfpq = PQ.ivfpq_topk(
+            emb, codes, books, qvec, k=10, nprobe=3, n_cand=50,
+            centroids=local,
+        )
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        assert len(ivf.collect()) == 10
+        assert len(ivfpq.collect()) == 10
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
 
 
 def test_ivf_batch_topk_indexed_prunes_and_matches(spark, emb, tmp_path):

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from strava_vector_search_spark.io.tables import load_table
 from strava_vector_search_spark.operators.ann import (
     append_to_srp_index,
+    collect_centroids,
     compact_index,
     srp_topk_indexed,
     write_srp_index,
@@ -196,8 +197,14 @@ def test_ivf_append_equals_rebuild(spark, emb, qv, tmp_path):
         full,
     )
     assert _ivf_rows(spark, inc) == _ivf_rows(spark, full)
-    got = ivf_topk(spark.read.parquet(inc), qv, k=10, centroids=cents)
-    want = ivf_topk(spark.read.parquet(full), qv, k=10, centroids=cents)
+    got = ivf_topk(
+        spark.read.parquet(inc), qv, k=10,
+        centroids=collect_centroids(cents),
+    )
+    want = ivf_topk(
+        spark.read.parquet(full), qv, k=10,
+        centroids=collect_centroids(cents),
+    )
     assert [tuple(r) for r in got.select("vec_id", "similarity").collect()] \
         == [tuple(r) for r in want.select("vec_id", "similarity").collect()]
 
@@ -299,7 +306,10 @@ def test_streaming_ivf_index_refresh(spark, emb, qv, tmp_path):
                 break
             time.sleep(1)
         assert spark.read.parquet(idx).count() == emb.count()
-        got = ivf_topk(spark.read.parquet(idx), qv, k=10, centroids=cents)
+        got = ivf_topk(
+            spark.read.parquet(idx), qv, k=10,
+            centroids=collect_centroids(cents),
+        )
         assert [tuple(r) for r in got.select("vec_id", "similarity").collect()] \
             == _ivf_rebuild_topk(spark, emb, qv, cents, tmp_path)
     finally:
@@ -321,7 +331,10 @@ def _ivf_rebuild_topk(spark, emb, qv, cents, tmp_path, name="full"):
     write_ivf_index(
         old.unionByName(assign_to_centroids(new.drop("label"), cents)), full
     )
-    want = ivf_topk(spark.read.parquet(full), qv, k=10, centroids=cents)
+    want = ivf_topk(
+        spark.read.parquet(full), qv, k=10,
+        centroids=collect_centroids(cents),
+    )
     return [tuple(r) for r in want.select("vec_id", "similarity").collect()]
 
 
@@ -368,7 +381,10 @@ def test_ivf_stream_module_refresh_drift_and_replay(spark, emb, qv, tmp_path):
         dr = drift_report(spark, idx, cents)
         assert dr.count() > 0
         assert dr.filter(F.col("drift") < 0).count() == 0
-        got = ivf_topk(spark.read.parquet(idx), qv, k=10, centroids=cents)
+        got = ivf_topk(
+            spark.read.parquet(idx), qv, k=10,
+            centroids=collect_centroids(cents),
+        )
         assert [tuple(r) for r in got.select("vec_id", "similarity").collect()] \
             == _ivf_rebuild_topk(spark, emb, qv, cents, tmp_path)
     finally:

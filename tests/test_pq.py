@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from strava_vector_search_spark.io.tables import load_table
 from strava_vector_search_spark.operators import pq as PQ
+from strava_vector_search_spark.operators.ann import collect_centroids
 from strava_vector_search_spark.operators.search import brute_force_topk
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -134,7 +135,7 @@ def test_ivfpq_equals_pq_within_probed_clusters(spark, emb, books):
     approx = PQ.ivfpq_topk(
         emb, codes, books, qv, k=10, nprobe=nprobe,
         n_cand=n_in_probe,  # full-coverage budget -> zero candidate loss
-        centroids=cents,
+        centroids=collect_centroids(cents),
     ).collect()
     assert [(r["vec_id"], r["similarity"]) for r in approx] == [
         (r["vec_id"], r["similarity"]) for r in exact
@@ -163,7 +164,8 @@ def test_ivfpq_kernel_runs_at_cluster_width(spark):
     )
     emb = spark.createDataFrame([(0, [1.0] * (m * 2))], "vec_id long, embedding array<double>")
     out = PQ.ivfpq_topk(
-        emb, codes, books, [1.0, 0.5, -0.5, 0.25], nprobe=2, centroids=cents
+        emb, codes, books, [1.0, 0.5, -0.5, 0.25], nprobe=2,
+        centroids=collect_centroids(cents),
     )
     plan = out._jdf.queryExecution().executedPlan().toString()
     width = spark.sparkContext.defaultParallelism
@@ -250,10 +252,12 @@ def test_pq_index_roundtrip_identity(spark, emb, books, tmp_path):
         float(x) for x in emb.filter(F.col("vec_id") == 7).head()["embedding"]
     ]
     trained = PQ.ivfpq_topk(
-        emb, codes, books, qv, k=10, cluster_col="label", centroids=cents
+        emb, codes, books, qv, k=10, cluster_col="label",
+        centroids=collect_centroids(cents),
     ).collect()
     loaded = PQ.ivfpq_topk(
-        emb, codes2, books2, qv, k=10, cluster_col="label", centroids=cents2
+        emb, codes2, books2, qv, k=10, cluster_col="label",
+        centroids=collect_centroids(cents2),
     ).collect()
     assert [(r["vec_id"], r["similarity"]) for r in trained] == [
         (r["vec_id"], r["similarity"]) for r in loaded

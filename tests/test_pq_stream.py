@@ -14,6 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from strava_vector_search_spark.operators import pq as PQ
+from strava_vector_search_spark.operators.ann import collect_centroids
 from strava_vector_search_spark.streaming.pq_stream import (
     init_pq_stream_index,
     process_pq_batch,
@@ -130,7 +131,7 @@ def test_stream_appends_codes_from_frozen_codebooks(
     qv = [float(x) for x in _vec(1, 12)]
     top = PQ.ivfpq_topk(
         emb_all, codes, loaded_books, qv, k=1, nprobe=1, n_cand=5,
-        cluster_col="cluster", centroids=loaded_cents,
+        cluster_col="cluster", centroids=collect_centroids(loaded_cents),
     ).collect()
     # note: emb_all lacks cluster, but ivfpq_topk prunes via the CODE
     # table's cluster column and rescores by id semi-join — the fat

@@ -79,8 +79,7 @@ def main() -> None:
 
     from strava_vector_search_spark.operators.search import matryoshka_topk
 
-    cents = A.compute_centroids(big_emb, "label").cache()
-    cents.count()
+    cents = A.collect_centroids(A.compute_centroids(big_emb, "label"))
     sec, _ = t(lambda: A.ivf_topk(
         big_emb, qv, k=10, nprobe=2, id_col="vec_id", centroids=cents
     ).collect())
@@ -104,7 +103,7 @@ def main() -> None:
                     "one-off batch index build (MLlib); amortized across "
                     "every query"))
     ivf_cents = A.compute_centroids(big_ivf, "label").cache()
-    ivf_cents.count()
+    ivf_local = A.collect_centroids(ivf_cents)
     exact_ids = {
         r["vec_id"]
         for r in brute_force_topk(big_emb, qv, k=10, id_col="vec_id").collect()
@@ -112,13 +111,13 @@ def main() -> None:
     for nprobe in (1, 2, 4):
         sec, _ = t(lambda np=nprobe: A.ivf_topk(
             big_ivf, qv, k=10, nprobe=np, id_col="vec_id",
-            centroids=ivf_cents,
+            centroids=ivf_local,
         ).collect())
         got = {
             r["vec_id"]
             for r in A.ivf_topk(
                 big_ivf, qv, k=10, nprobe=nprobe, id_col="vec_id",
-                centroids=ivf_cents,
+                centroids=ivf_local,
             ).collect()
         }
         rec = len(got & exact_ids) / 10
@@ -145,7 +144,7 @@ def main() -> None:
     for qrow in q32.collect()[:8]:  # 8 sequential probes, extrapolated
         A.ivf_topk(
             big_ivf, [float(x) for x in qrow["query_vec"]], k=10,
-            nprobe=2, id_col="vec_id", centroids=ivf_cents,
+            nprobe=2, id_col="vec_id", centroids=ivf_local,
         ).count()
     sec_loop8 = time.time() - t0
     results.append((
@@ -379,7 +378,8 @@ def main() -> None:
         "table that fits cluster RAM at 100 TB raw"))
     sec, rows = t(lambda: PQ.ivfpq_topk(
         big768, codes768, books768, qv768, k=10, nprobe=4, n_cand=200,
-        cluster_col="cluster", id_col="vec_id", centroids=cents768,
+        cluster_col="cluster", id_col="vec_id",
+        centroids=A.collect_centroids(cents768),
     ).collect())
     ivfpq_rec = len({r["vec_id"] for r in rows} & exact768_1m) / 10
     results.append((
@@ -397,6 +397,7 @@ def main() -> None:
     write_sec = time.time() - t0
     t0 = time.time()
     lb, lcodes, lcents, _meta = PQ.load_pq_index(spark, pq_dir)
+    lcents = A.collect_centroids(lcents)
     sec, _ = t(lambda: PQ.ivfpq_topk(
         big768, lcodes, lb, qv768, k=10, nprobe=4, n_cand=200,
         cluster_col="cluster", id_col="vec_id", centroids=lcents,
